@@ -28,9 +28,11 @@ import pyarrow.parquet as pq
 
 VOCAB_SIZE = 50_000
 ZIPF_S = 1.1
-# The vocabulary is the same for every seed, so the index size and the
-# df strata do not move with the seed; only the sampling does.
+# The vocabulary and the corpus shape (conversation sizes, roles, turn
+# lengths) are the same for every seed, so the index size and the df
+# strata do not move with the seed; the seed picks the words.
 VOCAB_SEED = 0
+SHAPE_SEED = 1
 TURNS_PER_CONV = 8
 MEAN_TOKENS = {"user": 12, "assistant": 80, "tool": 40}
 TOOLS = (
@@ -144,15 +146,16 @@ def generate(
     t0_seconds: int = 0,
     n_turns: int | None = None,
 ) -> Corpus:
-    """``n_convs`` conversations of ~8 turns drawn with ``seed``; with
-    ``n_turns``, the last conversations are cut so there are exactly
-    that many turns.
+    """``n_convs`` conversations of ~8 turns, their words drawn with
+    ``seed``; with ``n_turns``, the last conversations are cut so there
+    are exactly that many turns.
 
     ``conv_prefix`` names the conversations, so appended batches never
     collide with the initial corpus.
     """
     rng = np.random.default_rng(seed)
-    turns_per = np.clip(rng.poisson(TURNS_PER_CONV - 1, n_convs) + 1, 2, 16)
+    shape = np.random.default_rng([SHAPE_SEED, n_convs])
+    turns_per = np.clip(shape.poisson(TURNS_PER_CONV - 1, n_convs) + 1, 2, 16)
     if n_turns is not None:
         ends = np.cumsum(turns_per)
         n_convs = int(np.searchsorted(ends, n_turns)) + 1
@@ -166,11 +169,11 @@ def generate(
     roles = np.where(
         turn_idx == 0,
         0,
-        np.where(rng.random(n) < 0.25, 2, np.where(turn_idx % 2 == 1, 1, 0)),
+        np.where(shape.random(n) < 0.25, 2, np.where(turn_idx % 2 == 1, 1, 0)),
     )
     role_names = np.array(["user", "assistant", "tool"], dtype=object)[roles]
     means = np.array([MEAN_TOKENS["user"], MEAN_TOKENS["assistant"], MEAN_TOKENS["tool"]])[roles]
-    lengths = np.maximum(1, rng.poisson(means))
+    lengths = np.maximum(1, shape.poisson(means))
     offsets = np.concatenate(([0], np.cumsum(lengths))).astype(np.int64)
     n_tok = int(offsets[-1])
     tokens = np.searchsorted(zipf_cdf(len(vocab)), rng.random(n_tok), side="right")
@@ -201,12 +204,16 @@ class QueryGen:
     (> 2,000). Tail words are drawn only among words that occur, so
     every stratum has matches. Phrases are bigrams sampled from the
     corpus text; wildcards are ``abc*`` and ``abc*yz`` patterns cut
-    from torso/tail words.
+    from torso/tail words. Query shapes (words per ranked query, clauses
+    per boolean query, wildcard form) do not depend on the seed: the
+    seed picks the words, so the work a query shape costs the engine is
+    the same in every run.
     """
 
     def __init__(self, seed: int, corpus: Corpus):
         self.rng = np.random.default_rng(seed)
         self.corpus = corpus
+        self.calls = {"boolean": 0, "wildcard": 0}
         present = np.unique(corpus.tokens)
         self.strata = {
             "head": present[present < HEAD_MAX_RANK],
@@ -220,18 +227,23 @@ class QueryGen:
         ids = self.strata[stratum]
         return str(self.corpus.vocab[ids[self.rng.integers(0, ids.size)]])
 
+    def _alternate(self, kind: str) -> bool:
+        """True on every other call for ``kind``, starting with the first."""
+        self.calls[kind] += 1
+        return self.calls[kind] % 2 == 1
+
     def ranked(self) -> str:
-        """2-3 words, one from each stratum in random order."""
+        """Three words, one from each stratum, in random order."""
         words = [self.word("head"), self.word("torso"), self.word("tail")]
         self.rng.shuffle(words)
-        return " ".join(words[: self.rng.integers(2, 4)])
+        return " ".join(words)
 
     def boolean(self) -> str:
-        """An AND of two words, OR-ed with a second AND half the time."""
+        """An AND of two words, OR-ed with a second AND on every other call."""
         lit = lambda: f"{self.word('torso')} {self.word()}"  # noqa: E731
-        if self.rng.random() < 0.5:
-            return f"{lit()} + {lit()}"
-        return lit()
+        if self._alternate("boolean"):
+            return lit()
+        return f"{lit()} + {lit()}"
 
     def phrase(self) -> str:
         c = self.corpus
@@ -244,6 +256,6 @@ class QueryGen:
 
     def wildcard(self) -> str:
         w = self.word(("torso", "tail")[self.rng.integers(0, 2)])
-        if self.rng.random() < 0.5:
+        if self._alternate("wildcard"):
             return w[:3] + "*"
         return w[:3] + "*" + w[-2:]

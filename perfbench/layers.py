@@ -57,9 +57,11 @@ def per_layer(run) -> dict:
     put("build.tf_stats_s", sum(p.get("tf_and_stats", 0.0) for p in chunk_phases), "s")
     put("build.vocab_s", sum(p.get("vocab", 0.0) for p in chunk_phases), "s")
     put("build.postings_s", sum(p.get("postings", 0.0) for p in chunk_phases), "s")
+    build_s = _med(run.times.get("build", []))
+    put("build.turns_per_s", run.corpus.n_turns / build_s if build_s else 0.0, "turns/s")
     put("build.posting_rows", int(bm.get("posting_rows", 0)), "count")
     put("build.posting_bytes", int(bm.get("posting_bytes", 0)), "B")
-    build = named("build")[:1]
+    build = named("build")[-1:]  # the last set-up's build, whose index serves the run
     b = build[0] if build else {}
     put("build.jobs", b.get("jobs", 0), "count")
     put("build.stages", b.get("stages", 0), "count")
@@ -82,6 +84,7 @@ def per_layer(run) -> dict:
 
     # engine: open, first query, and each query type of the mix
     put("engine.open_s", _med(_dur(s) for s in named("open")), "s")
+    put("engine.first_query_s", _med(run.times.get("open_first_query", [])), "s")
     first = named("first_query")
     put("engine.first_query.jobs", _med_count(s["jobs"] for s in first), "count")
     put("engine.first_query.udf.python_boot_s", _med(s["python_boot_ms"] / 1e3 for s in first), "s")
@@ -102,8 +105,9 @@ def per_layer(run) -> dict:
         put(f"{p}.shuffle_bytes", _med_count(s["shuffle_write_bytes"] for s in qs), "B")
         put(f"{p}.driver_rows", _med_count(s.get("rows", 0) for s in qs), "count")
     put("engine.wildcard.expand_s", _med(_dur(s) for s in named("wildcard_expand")), "s")
-    samples = run.query_samples()
+    samples = run.query_times()
     p90 = statistics.quantiles(samples, n=10)[8] if len(samples) >= 2 else 0.0
+    put("engine.query_p50_s", _med(samples), "s")
     put("engine.query_p90_s", p90, "s")
 
     # writers
@@ -117,6 +121,7 @@ def per_layer(run) -> dict:
     put("delete.jobs", _med_count(s["jobs"] for s in deletes), "count")
     put("delete.fsio_ops", _med_count(s["fsio_ops"] for s in deletes), "count")
     refresh = [s for s in named("query.ranked") if s.get("after")]
+    put("refresh.first_query.p50_s", _med(_dur(s) for s in refresh), "s")
     put("refresh.first_query.jobs", _med_count(s["jobs"] for s in refresh), "count")
     put("refresh.first_query.input_bytes", _med_count(s["input_bytes"] for s in refresh), "B")
     compact = named("compact")[:1]

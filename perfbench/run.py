@@ -135,6 +135,7 @@ def main(argv=None) -> int:
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
     host = host_settings(work)
+    t_run = time.perf_counter()
     probe_before = cpu_probe()
     steal_before = steal_s()
     spark = None
@@ -159,6 +160,7 @@ def main(argv=None) -> int:
             "host": host,
             "probe_s": {"before": probe_before, "after": cpu_probe()},
             "steal_s": steal_s() - steal_before,
+            "run_s": time.perf_counter() - t_run,
         }
     )
     if args.trace:

@@ -1,19 +1,24 @@
 """Spans around the benchmark's calls into the engine, with Spark deltas.
 
-A traced run wraps every public call the workloads make in a span
-(name, start, end, parent, request id). Each span runs its Spark jobs
-under a job group of its own, so when it ends the tracer can read, from
-Spark's status stores, exactly the jobs it caused:
+Every public call the workloads make runs in a span (name, start, end,
+parent, request id). Each span runs its Spark jobs under a job group of
+its own, so when it ends the tracer reads, from Spark's core status
+store, exactly the jobs it caused: jobs, stages, tasks, executor
+run/CPU time, input, output and shuffle bytes of every stage that ran.
+The end-to-end work counts come from these, in every run; the reads
+happen after the span's clock has stopped.
 
-* core store: jobs, stages, tasks, executor run/CPU time, input,
-  output and shuffle bytes of every stage that ran;
-* SQL store: the Python-worker metrics (``PythonSQLMetrics``) of every
-  SQL execution of those jobs, read exactly from the live accumulators,
-  or, once Spark has dropped them, from the store's rendered totals.
+A detailed tracer (traced runs) adds:
 
-``fsio`` calls are counted by wrappers installed around the module's
-public functions. Spans are kept in memory and written out at the end.
-An untraced run uses :data:`OFF`, whose spans do nothing.
+* the Python-worker metrics (``PythonSQLMetrics``) of every SQL
+  execution of the span's jobs, read from Spark's SQL status store,
+  exactly from the live accumulators or, once Spark has dropped them,
+  from the store's rendered totals;
+* ``fsio`` call counts, from wrappers installed around the module's
+  public functions;
+* child spans from :meth:`Tracer.wrap`.
+
+Spans are kept in memory; traced runs write them out at the end.
 """
 
 from __future__ import annotations
@@ -52,21 +57,6 @@ FSIO_FUNCTIONS = (
 )
 
 
-class _Off:
-    """The tracer of an untraced run."""
-
-    enabled = False
-
-    def span(self, name: str, **_attrs):
-        return contextlib.nullcontext()
-
-    def wrap(self, obj, method: str, name: str) -> None:
-        pass
-
-
-OFF = _Off()
-
-
 _UNITS = {
     "ms": 1, "s": 1e3, "m": 6e4, "h": 3.6e6,
     "B": 1, "KiB": 1 << 10, "MiB": 1 << 20, "GiB": 1 << 30, "TiB": 1 << 40,
@@ -92,9 +82,8 @@ def _scala_iter(seq):
 
 
 class Tracer:
-    enabled = True
-
-    def __init__(self, spark):
+    def __init__(self, spark, detail: bool):
+        self.detail = detail
         self.spark = spark
         self.sc = spark.sparkContext
         self.jvm = spark._jvm
@@ -106,7 +95,8 @@ class Tracer:
         self._executions: dict[frozenset, dict] = {}
         self._fsio_depth = 0
         self.self_s = 0.0  # time spent in the tracer's own bookkeeping
-        self._install_fsio_counters()
+        if detail:
+            self._install_fsio_counters()
 
     # -------------------------------------------------------------- spans
     @contextlib.contextmanager
@@ -130,22 +120,31 @@ class Tracer:
         rec["start"] = time.perf_counter()
         try:
             yield rec
-        finally:
+        except BaseException:
+            # the call failed or the run is being stopped: leave the
+            # counters at 0, and let no JVM error from restoring the job
+            # group hide the original exception
             rec["end"] = time.perf_counter()
-            t_out = time.perf_counter()
-            self.sc.setLocalProperty("spark.jobGroup.id", prev_group)
             self._stack.pop()
-            self._collect(rec, group)
-            if parent is not None:
-                for c in COUNTERS:
-                    parent[c] += rec[c]
-            self.self_s += time.perf_counter() - t_out
+            with contextlib.suppress(Exception):
+                self.sc.setLocalProperty("spark.jobGroup.id", prev_group)
+            raise
+        rec["end"] = time.perf_counter()
+        t_out = time.perf_counter()
+        self.sc.setLocalProperty("spark.jobGroup.id", prev_group)
+        self._stack.pop()
+        self._collect(rec, group)
+        if parent is not None:
+            for c in COUNTERS:
+                parent[c] += rec[c]
+        self.self_s += time.perf_counter() - t_out
 
     def wrap(self, obj, method: str, name: str) -> None:
         """Make ``obj.method`` open a span named ``name`` on every call
-        (nested calls made by the engine itself included)."""
+        (nested calls made by the engine itself included); detailed
+        tracers only."""
         fn = getattr(obj, method, None)
-        if fn is None:
+        if fn is None or not self.detail:
             return
 
         @functools.wraps(fn)
@@ -203,7 +202,8 @@ class Tracer:
             rec["tasks"] += int(st.numTasks())
             for key, getter in STAGE_FIELDS.items():
                 rec[key] += int(getattr(st, getter)())
-        self._collect_python_metrics(rec, job_ids)
+        if self.detail:
+            self._collect_python_metrics(rec, job_ids)
 
     def _collect_python_metrics(self, rec: dict, job_ids: set[int]) -> None:
         """Add the PythonSQLMetrics of the SQL executions that ran the

@@ -1,19 +1,29 @@
 """The two workloads and the metrics they report.
 
 Both workloads set up the same way: start the session, generate the
-corpus, build the index with ``TranscriptSearchEngine.build``, open it
-and run one ranked query. They then stress different layers:
+corpus, then ``SETUPS`` times build the index with
+``TranscriptSearchEngine.build`` into a fresh directory, open it and run
+one ranked query; the last index serves the rest of the run. One set-up
+costs 15-30 s of a run's ~60 s on a 4-core VM, so there is one. They
+then stress different layers:
 
-* ``query_mix``: a closed loop, one client, k=10, over a 4k-turn index
-  with 128-doc posting blocks (32 blocks, so WAND has blocks to prune),
-  running a fixed 20-slot schedule of six query types; then one append
-  and one delete.
-* ``ingest_mix``: a 2k-turn index with the default block layout; write
+* ``query_mix``: a closed loop, one client, k=10, over a 1k-turn index
+  with 32-doc posting blocks (32 blocks, so WAND has blocks to prune),
+  running a fixed 20-slot schedule of six query types, for ``seconds``
+  and at least ``COUNTED_QUERIES`` queries; then one append and one
+  delete.
+* ``ingest_mix``: a 1k-turn index with the default block layout; write
   cycles (append ~1% new conversations, delete ~0.1% of live ids, a
   ranked and a boolean query after each write). Traced runs then
   ``compact``, check a ranked and a boolean answer and run a deep
   ``fsck``; no end-to-end metric depends on that tail, and it would cost
   every untraced run a fifth of its time.
+
+Every engine call runs in a span of :mod:`trace`, which times it and
+counts the Spark work it caused. The end-to-end metrics are the set-up
+wall time and that work (jobs, tasks, bytes scanned) per operation;
+wall-clock latencies are in the report and, for traced runs, in the
+per-layer metrics.
 
 Every answer is checked against :mod:`oracle`; a wrong answer or an
 exception counts as a failed operation.
@@ -35,29 +45,36 @@ import trace
 from oracle import Oracle, check_topk
 
 K = 10
-FIRST_QUERY_OPENS = 3
+# set-ups per run (build + open + first query); the median is reported
+SETUPS = 1
 SIZES = {
     # turns in the setup index, posting block span, appended share of
     # conversations per append, deleted share of live ids per delete
-    "query_mix": {"turns": 4_000, "block_span": 128, "append_share": 0.01, "delete_share": 0.001},
-    "ingest_mix": {"turns": 2_000, "block_span": 1 << 16, "append_share": 0.01, "delete_share": 0.001},
+    "query_mix": {"turns": 1_000, "block_span": 32, "append_share": 0.01, "delete_share": 0.001},
+    "ingest_mix": {"turns": 1_000, "block_span": 1 << 16, "append_share": 0.01, "delete_share": 0.001},
 }
+# queries of the mix the end-to-end work counts cover: the first ones of
+# the schedule, so every run counts the same query shapes
+COUNTED_QUERIES = 12
 # 25% ranked, 15% WAND, 15% BM25, 20% boolean, 15% phrase, 10% wildcard
 SCHEDULE = (
     "ranked", "boolean", "ranked_wand", "bm25", "phrase",
-    "ranked", "wildcard", "boolean", "bm25", "ranked_wand",
+    "wildcard", "ranked", "boolean", "bm25", "ranked_wand",
     "ranked", "phrase", "boolean", "bm25", "ranked",
     "ranked_wand", "wildcard", "phrase", "boolean", "ranked",
 )
 
 E2E_UNITS = {
     "setup_s": "s",
-    "build_turns_per_s": "turns/s",
     "index_bytes_per_text_byte": "ratio",
-    "first_query_s": "s",
-    "query_p50_s": "s",
-    "append_p50_s": "s",
-    "delete_p50_s": "s",
+    "build_jobs": "count",
+    "build_tasks": "count",
+    "first_query_jobs": "count",
+    "query_jobs": "jobs/query",
+    "query_tasks": "tasks/query",
+    "append_jobs": "count",
+    "append_tasks": "count",
+    "delete_jobs": "count",
 }
 
 
@@ -81,13 +98,16 @@ class Run:
         self.seconds = args.seconds
         self.size = SIZES[self.workload]
         self.work = work
-        self.index_dir = os.path.join(work, "index")
-        self.tracer = trace.Tracer(spark) if args.trace else trace.OFF
+        self.index_dir = None  # the index of the last set-up
+        self.detail = bool(args.trace)
+        self.tracer = trace.Tracer(spark, detail=self.detail)
         self.session_s = session_s
         self.attempted = 0
         self.failed = 0
         self.errors: list[str] = []
-        self.times: dict[str, list[float]] = {}
+        self.times: dict[str, list[float]] = {}  # wall-clock seconds
+        self.spans: dict[str, list[dict]] = {}  # the span of each timed call
+        self.setup_times: list[float] = []
         self.values: dict[str, float] = {}
         self.oracle = Oracle()
         self.eng = None
@@ -102,19 +122,23 @@ class Run:
 
     def op(self, name: str, fn, check=None, record: str | None = None, **attrs):
         """Run and time one engine call; ``check(result)`` returns None
-        when the answer is right, else a description of what is wrong."""
+        when the answer is right, else a description of what is wrong.
+        Returns the result and its wall-clock seconds; the seconds and
+        the span go to ``self.times`` and ``self.spans`` under ``record``
+        (default: ``name``)."""
         self.attempted += 1
         try:
             with self.tracer.span(name, **attrs) as rec:
                 t0 = time.perf_counter()
                 result = fn()
                 dt = time.perf_counter() - t0
-                if rec is not None and isinstance(result, list):
+                if isinstance(result, list):
                     rec["rows"] = len(result)
         except Exception:
             self._fail(f"{name}: {traceback.format_exc(limit=3)}")
             return None, None
         self.times.setdefault(record or name, []).append(dt)
+        self.spans.setdefault(record or name, []).append(rec)
         if check is not None:
             problem = check(result)
             if problem is not None:
@@ -139,24 +163,16 @@ class Run:
         corpus_path = os.path.join(self.work, "corpus.parquet")
         self.text_bytes = self.corpus.write_parquet(corpus_path)
         self.queries = gen.QueryGen(self.seed + 1, self.corpus)
-        self.setup_s = self.session_s + time.perf_counter() - t0
+        self.generate_s = time.perf_counter() - t0
         texts = self.corpus.texts()
         self.oracle.add(texts, 0)
         self.next_doc_id = self.corpus.n_turns
 
         try:
-            self.write(
-                "build",
-                lambda: TranscriptSearchEngine.build(
-                    self.spark,
-                    self.spark.read.parquet(corpus_path),
-                    self.index_dir,
-                    block_span=self.size["block_span"],
-                ),
-            )
+            for i in range(SETUPS):
+                self.set_up(corpus_path, os.path.join(self.work, f"index{i}"))
             self.index_bytes = dir_bytes(self.index_dir)
             self.read_build_outputs()
-            self.first_query()
             if self.workload == "query_mix":
                 self.query_loop()
                 self.write_cycle(post_write_queries=False)
@@ -166,11 +182,11 @@ class Run:
                     self.write_cycle(post_write_queries=True)
                     cycles += 1
                 self.values["cycles"] = cycles
-                if self.tracer.enabled:
+                if self.detail:
                     self.compact_and_fsck()
         except WriteFailed:
             pass
-        if self.tracer.enabled:
+        if self.detail:
             self.layer_micro(texts)
 
     def read_build_outputs(self) -> None:
@@ -185,32 +201,38 @@ class Run:
             for t in ("postings", "terms", "kgrams", "doc_stats", "docs")
         }
 
-    def first_query(self) -> None:
-        """Open the index and run one ranked query, ``FIRST_QUERY_OPENS``
-        times on fresh engine objects (each reloads and re-caches the
-        tables); the first follows the build directly."""
-        samples = []
-        for _ in range(FIRST_QUERY_OPENS):
-            q = self.queries.ranked()
-            eng, open_s = self.op("open", lambda: self.Engine(self.spark, self.index_dir))
-            if eng is None:
-                raise WriteFailed("open")
-            for method, name in (
-                ("ranked_query_df", "plan"),
-                ("bm25_query_df", "plan"),
-                ("boolean_query_df", "plan"),
-                ("wildcard_expand", "wildcard_expand"),
-            ):
-                self.tracer.wrap(eng, method, name)
-            _result, query_s = self.op(
-                "first_query", lambda: eng.ranked_query(q, k=K),
-                check=lambda r: check_topk(r, self.oracle.ranked_scores(q), K),
-            )
-            if query_s is not None:
-                samples.append(open_s + query_s)
-        self.eng = eng
-        if samples:
-            self.values["first_query_s"] = statistics.median(samples)
+    def set_up(self, corpus_path: str, index_dir: str) -> None:
+        """Build the index into ``index_dir``, open it on a fresh engine
+        object and run one ranked query (the first query after a build;
+        each open reloads and re-caches the tables)."""
+        self.write(
+            "build",
+            lambda: self.Engine.build(
+                self.spark,
+                self.spark.read.parquet(corpus_path),
+                index_dir,
+                block_span=self.size["block_span"],
+            ),
+        )
+        q = self.queries.ranked()
+        eng = self.write("open", lambda: self.Engine(self.spark, index_dir))
+        for method, name in (
+            ("ranked_query_df", "plan"),
+            ("bm25_query_df", "plan"),
+            ("boolean_query_df", "plan"),
+            ("wildcard_expand", "wildcard_expand"),
+        ):
+            self.tracer.wrap(eng, method, name)
+        _result, query_s = self.op(
+            "first_query", lambda: eng.ranked_query(q, k=K),
+            check=lambda r: check_topk(r, self.oracle.ranked_scores(q), K),
+        )
+        if query_s is None:
+            raise WriteFailed("first_query")
+        open_s = self.times["open"][-1]
+        self.times.setdefault("open_first_query", []).append(open_s + query_s)
+        self.setup_times.append(self.times["build"][-1] + open_s + query_s)
+        self.eng, self.index_dir = eng, index_dir
 
     # ------------------------------------------------------------ queries
     def run_query(self, qtype: str, q: str, record: str | None = None, **attrs):
@@ -236,17 +258,17 @@ class Run:
         }[qtype]()
 
     def query_loop(self) -> None:
-        """Closed loop, one client, for ``seconds``; queries are drawn
-        up front so the sequence does not depend on timing."""
+        """Closed loop, one client, for ``seconds`` and at least the
+        ``COUNTED_QUERIES`` queries the end-to-end work counts cover;
+        queries are drawn up front so the sequence does not depend on
+        timing."""
         plan = [(t, self.make_query(t)) for t in SCHEDULE * 20]
         t_start = time.perf_counter()
         n = 0
         for qtype, q in plan:
-            if time.perf_counter() - t_start >= self.seconds:
+            if n >= COUNTED_QUERIES and time.perf_counter() - t_start >= self.seconds:
                 break
-            _result, dt = self.run_query(qtype, q, record="mix", phase="mix")
-            if dt is not None:
-                self.times.setdefault(f"type.{qtype}", []).append(dt)
+            self.run_query(qtype, q, record=f"type.{qtype}", phase="mix", counted=n < COUNTED_QUERIES)
             n += 1
         self.values["mix_queries"] = n
 
@@ -350,23 +372,70 @@ class Run:
         self.values["codec.cells"] = len(cells)
 
     # ------------------------------------------------------------ results
-    def query_samples(self) -> list[float]:
-        return self.times.get("mix" if self.workload == "query_mix" else "post_write", [])
+    def query_groups(self) -> list[tuple[float, list[dict]]]:
+        """The queries the end-to-end query metrics cover, as (weight,
+        spans) groups: the counted queries of the mix (``query_mix``), or
+        the ranked query after appends and the one after deletes, half
+        each (``ingest_mix``)."""
+        if self.workload == "query_mix":
+            return [(1.0, [s for t in dict.fromkeys(SCHEDULE) for s in self.spans.get(f"type.{t}", [])
+                           if s["counted"]])]
+        after = lambda w: [s for s in self.spans.get("post_write", []) if s["after"] == w]  # noqa: E731
+        return [(0.5, after("append")), (0.5, after("delete"))]
 
-    def _median(self, key: str) -> float:
-        xs = self.times.get(key)
-        return statistics.median(xs) if xs else 0.0
+    def per_query(self, field: str) -> float:
+        """``field`` per query: the mean over each group, weighted by the
+        group's share, so the value does not depend on how many queries
+        a run got through."""
+        groups = [(w, spans) for w, spans in self.query_groups() if spans]
+        weight = sum(w for w, _ in groups)
+        return sum(
+            w * statistics.fmean(s[field] for s in spans) for w, spans in groups
+        ) / weight if weight else 0.0
 
     def e2e(self) -> dict:
-        build = self.times.get("build", [0.0])[0]
+        """Set-up wall time, index size, and the Spark work per operation."""
+        def count(key: str, field: str) -> int:
+            spans = self.spans.get(key, [])
+            return statistics.median_low(s[field] for s in spans) if spans else 0
+
+        open_fq = [
+            o["jobs"] + q["jobs"]
+            for o, q in zip(self.spans.get("open", []), self.spans.get("first_query", []))
+        ]
+        build = self.spans.get("build", [])[-1:]  # the build of the index the run serves from
         return {
-            "setup_s": self.setup_s,
-            "build_turns_per_s": self.corpus.n_turns / build if build else 0.0,
+            "setup_s": self.session_s + self.generate_s + statistics.median(self.setup_times or [0.0]),
             "index_bytes_per_text_byte": getattr(self, "index_bytes", 0) / self.text_bytes,
-            "first_query_s": self.values.get("first_query_s", 0.0),
-            "query_p50_s": statistics.median(self.query_samples() or [0.0]),
-            "append_p50_s": self._median("append"),
-            "delete_p50_s": self._median("delete"),
+            "build_jobs": build[0]["jobs"] if build else 0,
+            "build_tasks": build[0]["tasks"] if build else 0,
+            "first_query_jobs": statistics.median_low(open_fq) if open_fq else 0,
+            "query_jobs": self.per_query("jobs"),
+            "query_tasks": self.per_query("tasks"),
+            "append_jobs": count("append", "jobs"),
+            "append_tasks": count("append", "tasks"),
+            "delete_jobs": count("delete", "jobs"),
+        }
+
+    def query_times(self) -> list[float]:
+        """Wall-clock seconds of every query of the mix (``query_mix``) or
+        every ranked query after a write (``ingest_mix``)."""
+        keys = [f"type.{t}" for t in dict.fromkeys(SCHEDULE)] if self.workload == "query_mix" else ["post_write"]
+        return [s["end"] - s["start"] for k in keys for s in self.spans.get(k, [])]
+
+    def wall(self) -> dict:
+        """Wall-clock latencies, for the report."""
+        med = lambda xs: statistics.median(xs) if xs else 0.0  # noqa: E731
+        build_s = med(self.times.get("build", []))
+        return {
+            "session_s": self.session_s,
+            "generate_s": self.generate_s,
+            "setup_s": self.setup_times,
+            "build_turns_per_s": self.corpus.n_turns / build_s if build_s else 0.0,
+            "first_query_p50_s": med(self.times.get("open_first_query", [])),
+            "query_p50_s": med(self.query_times()),
+            "append_p50_s": med(self.times.get("append", [])),
+            "delete_p50_s": med(self.times.get("delete", [])),
         }
 
     def result(self) -> tuple[dict, dict]:
@@ -375,7 +444,7 @@ class Run:
             "workload": self.workload,
             "seed": self.seed,
             "seconds": self.seconds,
-            "trace": int(self.tracer.enabled),
+            "trace": int(self.detail),
             "sizes": {
                 **self.size,
                 "turns": self.corpus.n_turns,
@@ -384,12 +453,15 @@ class Run:
                 "client": "closed loop, 1 client",
             },
             "e2e": e2e,
+            "wall": self.wall(),
             "samples": {k: len(v) for k, v in self.times.items()},
-            "query_samples_s": self.query_samples(),
+            "wall_s": self.times,
+            "jobs": {k: [r["jobs"] for r in v] for k, v in self.spans.items()},
+            "tasks": {k: [r["tasks"] for r in v] for k, v in self.spans.items()},
             "values": self.values,
             "errors": self.errors,
         }
-        if self.tracer.enabled:
+        if self.detail:
             from layers import per_layer
 
             metrics = per_layer(self)
