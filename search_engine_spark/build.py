@@ -104,6 +104,13 @@ def term_bucket_col(col, n_buckets: int):
     return (F.crc32(F.encode(col, "UTF-8")) % F.lit(n_buckets)).cast("int")
 
 
+def block_id_col(block_span: int):
+    """The posting block of ``doc_id``, as the ``block_id`` column:
+    integer ``doc_id DIV block_span`` — a float division would round
+    ids above 2^53 into the wrong block."""
+    return F.expr(f"CAST(doc_id DIV {int(block_span)} AS LONG)").alias("block_id")
+
+
 def _tokens(docs: DataFrame) -> DataFrame:
     return docs.select(
         "doc_id", F.explode(analyze_udf("text")).alias("tk")
@@ -283,6 +290,36 @@ def _encode_partial_blocks_impl(batches, block_span):
 
 
 POSTINGS_BUCKETED_SCHEMA = POSTINGS_SCHEMA + ", bucket int"
+
+# Hive-style directory partitions (``chunk=N``, ``bucket=M``): part of a
+# table's schema, never of the files inside it.
+PARTITION_COLUMNS = ("chunk", "bucket")
+
+# Schema of every index table as ``spark.read.parquet`` infers it,
+# partition columns included. Readers pass it to skip the footer-reading
+# job schema inference runs on every open; writers park empty files
+# with :func:`file_schema`. ``docs`` is absent: its columns follow the
+# caller's transcripts. ``terms`` and ``tombstones`` name the versioned
+# snapshot families (``terms_v<N>``, ``tombstones_v<N>``).
+TABLE_SCHEMAS = {
+    "postings": POSTINGS_SCHEMA + ", chunk int, bucket int",
+    "doc_stats": "doc_id long, weight double, doc_len long, n_terms long, chunk int",
+    "terms": "term string, df long, cf long",
+    "tombstones": "doc_id long, block_id long",
+    "kgrams": "gram string, word string, n_grams int",
+    "vocab": "word string, n_grams int",
+    "vocab_chunks": "word string, chunk int",
+}
+
+
+def file_schema(table: str) -> str:
+    """``TABLE_SCHEMAS[table]`` without its partition columns — the
+    columns stored inside the table's Parquet files."""
+    return ", ".join(
+        f
+        for f in TABLE_SCHEMAS[table].split(", ")
+        if f.split()[0] not in PARTITION_COLUMNS
+    )
 
 
 def _merge_sorted_partition(batches):
@@ -854,7 +891,7 @@ class IndexBuilder:
         )
         self._ensure_readable(
             self._p(new["doc_stats"], "chunk=0"),
-            "doc_id long, weight double, doc_len long, n_terms long",
+            file_schema("doc_stats"),
         )
         num_docs = int(obs.get["n_live"])
         total_tokens = int(obs.get["tokens"])
@@ -919,7 +956,8 @@ class IndexBuilder:
             .parquet(self._p(new["postings"], "chunk=0"))
         )
         self._ensure_readable(
-            self._p(new["postings"], "chunk=0", "bucket=0"), POSTINGS_SCHEMA
+            self._p(new["postings"], "chunk=0", "bucket=0"),
+            file_schema("postings"),
         )
 
         # vocab_chunks -> one deduplicated chunk; kgrams/vocab dedup
@@ -929,17 +967,17 @@ class IndexBuilder:
         vocab_words.write.mode("overwrite").parquet(
             self._p(new["vocab_chunks"], "chunk=0")
         )
-        self._ensure_readable(self._p(new["vocab_chunks"], "chunk=0"), "word string")
+        self._ensure_readable(
+            self._p(new["vocab_chunks"], "chunk=0"), file_schema("vocab_chunks")
+        )
         kg = spark.read.parquet(self._t("kgrams")).distinct()
         kg.repartition(self.write_partitions, "gram").sortWithinPartitions(
             "gram"
         ).write.mode("overwrite").parquet(self._p(new["kgrams"]))
-        self._ensure_readable(
-            self._p(new["kgrams"]), "gram string, word string, n_grams int"
-        )
+        self._ensure_readable(self._p(new["kgrams"]), file_schema("kgrams"))
         vb = spark.read.parquet(self._t("vocab")).distinct()
         vb.write.mode("overwrite").parquet(self._p(new["vocab"]))
-        self._ensure_readable(self._p(new["vocab"]), "word string, n_grams int")
+        self._ensure_readable(self._p(new["vocab"]), file_schema("vocab"))
 
         # purge closes the stats-staleness window: a fresh dictionary
         # snapshot recomputes df/cf from the SURVIVING postings (same
@@ -1057,10 +1095,8 @@ class IndexBuilder:
             )
         gen = meta.get("deletes", 0) + 1
         name = f"tombstones_v{gen:06d}"
-        block_span = meta["block_span"]
         tomb = new_ids.distinct().select(
-            "doc_id",
-            F.expr(f"CAST(doc_id DIV {block_span} AS LONG)").alias("block_id"),
+            "doc_id", block_id_col(meta["block_span"])
         )
         (
             tomb.repartitionByRange(
@@ -1070,7 +1106,7 @@ class IndexBuilder:
             .write.mode("overwrite")
             .parquet(self._p(name))
         )
-        self._ensure_readable(self._p(name), "doc_id long, block_id long")
+        self._ensure_readable(self._p(name), file_schema("tombstones"))
         n = spark.read.parquet(self._p(name)).count()
         new_meta = dict(meta)
         new_meta.update(
@@ -1109,7 +1145,7 @@ class IndexBuilder:
         stats.write.mode("overwrite").parquet(self._t("doc_stats", f"chunk={chunk}"))
         self._ensure_readable(
             self._t("doc_stats", f"chunk={chunk}"),
-            "doc_id long, weight double, doc_len long, n_terms long",
+            file_schema("doc_stats"),
         )
         t2 = time.time()
 
@@ -1122,7 +1158,7 @@ class IndexBuilder:
         vocab = analyzed.select(F.explode("words").alias("word")).distinct()
         vocab.write.mode("overwrite").parquet(self._t("vocab_chunks", f"chunk={chunk}"))
         self._ensure_readable(
-            self._t("vocab_chunks", f"chunk={chunk}"), "word string"
+            self._t("vocab_chunks", f"chunk={chunk}"), file_schema("vocab_chunks")
         )
         t3 = time.time()
 
@@ -1178,7 +1214,8 @@ class IndexBuilder:
         # filler goes under a bucket= dir so partition discovery keeps a
         # consistent directory depth next to non-empty chunks
         self._ensure_readable(
-            self._t("postings", f"chunk={chunk}", "bucket=0"), POSTINGS_SCHEMA
+            self._t("postings", f"chunk={chunk}", "bucket=0"),
+            file_schema("postings"),
         )
         agg = obs.get
         t4 = time.time()
@@ -1209,7 +1246,7 @@ class IndexBuilder:
         terms.repartition(self._term_parts(num_docs), "term").sortWithinPartitions(
             "term"
         ).write.mode("overwrite").parquet(self._p(name))
-        self._ensure_readable(self._p(name), "term string, df long, cf long")
+        self._ensure_readable(self._p(name), file_schema("terms"))
 
     def _write_meta(self, meta: dict, keep: tuple[str, ...] = ()) -> None:
         fsio.write_json_atomic(self.spark, self._p("_meta.json"), meta)
@@ -1277,13 +1314,11 @@ class IndexBuilder:
         ).repartition(self.write_partitions, "gram").sortWithinPartitions(
             "gram"
         ).write.mode("overwrite").parquet(self._t("kgrams"))
-        self._ensure_readable(
-            self._t("kgrams"), "gram string, word string, n_grams int"
-        )
+        self._ensure_readable(self._t("kgrams"), file_schema("kgrams"))
         vocab.select("word", "n_grams").write.mode("overwrite").parquet(
             self._t("vocab")
         )
-        self._ensure_readable(self._t("vocab"), "word string, n_grams int")
+        self._ensure_readable(self._t("vocab"), file_schema("vocab"))
 
         meta = {
             "num_docs": num_docs,

@@ -8,12 +8,17 @@ wildcard. Ranked retrieval is term-at-a-time tf-idf with
 ``L_d`` and tie-broken by lower doc_id (``query.py:69-84``,
 ``diskindex.py:90-99``).
 
-Execution is Spark-first: query terms become a broadcast dimension
-joined against the postings table (the reference's query-restricted
-index load, ``diskindex.py:59-80``, re-expressed as a broadcast-hash
-join + parquet predicate pushdown on ``term``), scoring is one
-DataFrame plan ending in ``TakeOrderedAndProject`` (distributed heap
-top-k), boolean set algebra is join/union over per-conjunct doc sets.
+Execution is Spark-first: the postings scan is pruned to the query
+terms (the reference's query-restricted index load,
+``diskindex.py:59-80``, re-expressed as bucket-directory pruning +
+parquet predicate pushdown on ``term``), and each query term's
+per-occurrence constants (qidx, wqt, phrase slot …) ride the plan as
+one literal ``term -> rows`` map looked up on the scanned cells — no
+driver-side rows become a dataset, so no broadcast job runs. Scoring
+is one DataFrame plan ending in ``TakeOrderedAndProject``
+(distributed heap top-k); boolean set algebra is join/union over
+per-conjunct doc sets, and the list API finishes the doc set on the
+driver.
 """
 
 from __future__ import annotations
@@ -30,7 +35,11 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from search_engine_spark import fsio
-from search_engine_spark.build import IndexBuilder  # noqa: F401  (re-export)
+from search_engine_spark.build import (  # noqa: F401  (IndexBuilder: re-export)
+    TABLE_SCHEMAS,
+    IndexBuilder,
+    block_id_col,
+)
 from search_engine_spark.functions import codec
 from search_engine_spark.text.kgrams import kgrams, wildcard_grams
 from search_engine_spark.text.normalize import (
@@ -41,6 +50,33 @@ from search_engine_spark.text.normalize import (
 
 JACCARD_THRESHOLD = 0.35  # reference query.py:14
 DEFAULT_K = 10  # reference query.py:25
+
+
+def _join_query_rows(df: DataFrame, rows, schema: str) -> DataFrame:
+    """Inner-join ``df`` with a handful of driver-side query rows.
+
+    ``rows`` are tuples typed by the DDL ``schema``; the first field is
+    the join key, a column of ``df``. The rows travel as ONE plan
+    literal, ``map<key, array<struct<rest>>>``, looked up per ``df`` row
+    and exploded: a key absent from the map drops the row, a key with
+    several rows multiplies it — the inner-join semantics of joining a
+    ``createDataFrame`` of the rows, without its parallelized-RDD scan
+    and the broadcast job that ships it. Output: ``df``'s columns, then
+    the rows' non-key fields."""
+    (key, _), *fields = [f.split() for f in schema.split(",")]
+    by_key: dict = {}
+    for row in rows:
+        by_key.setdefault(row[0], []).append(
+            F.struct(
+                *[F.lit(v).cast(t).alias(n) for v, (n, t) in zip(row[1:], fields)]
+            )
+        )
+    lookup = F.create_map(
+        *[c for k, vals in by_key.items() for c in (F.lit(k), F.array(*vals))]
+    )
+    return df.select("*", F.explode(lookup[F.col(key)]).alias("_q")).select(
+        *df.columns, *[F.col(f"_q.{n}") for n, _t in fields]
+    )
 
 
 def _block_scorer(k: int | None):
@@ -802,8 +838,8 @@ class TranscriptSearchEngine:
         self._tombstones_name: str | None = meta.get("tombstones_table")
         self.num_deleted: int = meta.get("num_deleted", 0)
 
-    def _load(self, name: str) -> DataFrame:
-        """Lazily read an index table, size-gated for caching.
+    def _load(self, table: str) -> DataFrame:
+        """Lazily read a logical index table, size-gated for caching.
 
         Tables load on FIRST USE, not at engine open: a ranked/boolean
         session never touches kgrams or doc_stats, so it never pays
@@ -819,15 +855,25 @@ class TranscriptSearchEngine:
         full-index read; the gate keeps the default config at
         O(query terms) I/O, matching the reference's query-restricted
         load (``diskindex.py:59-80``).
+
+        Every table but ``docs`` opens with its declared schema
+        (``build.TABLE_SCHEMAS``), so an open — and the re-open after
+        each write's :meth:`_refresh` — runs no footer-reading job.
         """
+        # the versioned snapshots are cached under their snapshot names
+        name = {"terms": self._terms_name, "tombstones": self._tombstones_name}.get(
+            table, table
+        )
         if name in self._tables:
             return self._tables[name]
         path = fsio.join(self.index_dir, self._table_names.get(name, name))
-        df = self.spark.read.parquet(path)
+        schema = TABLE_SCHEMAS.get(table)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        df = reader.parquet(path)
         # postings and docs NEVER persist: queries touch O(query terms)
         # of postings via storage pruning and O(k) of docs — caching
         # either would cost an O(index) scan to fill and lose pushdown.
-        if self.cache and name not in ("docs", "postings"):
+        if self.cache and table not in ("docs", "postings"):
             nbytes = fsio.tree_bytes(self.spark, path)
             if nbytes <= self.cache_max_bytes:
                 limit = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
@@ -849,7 +895,7 @@ class TranscriptSearchEngine:
 
     @property
     def terms(self) -> DataFrame:
-        return self._load(self._terms_name)
+        return self._load("terms")
 
     @property
     def doc_stats(self) -> DataFrame:
@@ -871,7 +917,7 @@ class TranscriptSearchEngine:
         like a dictionary table."""
         if self._tombstones_name is None:
             return None
-        return self._load(self._tombstones_name)
+        return self._load("tombstones")
 
     @property
     def num_live(self) -> int:
@@ -1163,12 +1209,12 @@ class TranscriptSearchEngine:
         by_term: dict[str, float] = {}
         for t, _i, w in occurrences:
             by_term[t] = by_term.get(t, 0.0) + w
-        wdf = self.spark.createDataFrame(
-            list(by_term.items()), "term string, wqt double"
-        )
         meta = (
-            self._postings_for_terms(by_term)
-            .join(F.broadcast(wdf), "term")
+            _join_query_rows(
+                self._postings_for_terms(by_term),
+                by_term.items(),
+                "term string, wqt double",
+            )
             .groupBy("block_id")
             .agg(F.sum(row_ub).alias("ub"))
         )
@@ -1232,17 +1278,14 @@ class TranscriptSearchEngine:
         (the exhaustive plan)."""
         if scorer is None:
             scorer = _block_scorer(None)
-        wdf = self.spark.createDataFrame(
-            occurrences, "term string, qidx int, wqt double"
-        )
         cells = self._postings_for_terms([t for t, _i, _w in occurrences])
         if block_ids is not None:
             cells = cells.where(
                 F.col("block_id").isin([int(b) for b in block_ids])
             )
-        cells = cells.join(F.broadcast(wdf), "term").select(
-            "block_id", "qidx", "wqt", *payload_cols
-        )
+        cells = _join_query_rows(
+            cells, occurrences, "term string, qidx int, wqt double"
+        ).select("block_id", "qidx", "wqt", *payload_cols)
         tomb = self.tombstones
         if tomb is not None:
             # tombstones masked INSIDE the scoring rounds: a deleted
@@ -1309,12 +1352,7 @@ class TranscriptSearchEngine:
         to, so the cogrouped scorer sees each block's allowed set
         without any per-doc join against posting rows."""
         pred = F.expr(where) if isinstance(where, str) else where
-        return self.docs.where(pred).select(
-            "doc_id",
-            F.expr(f"CAST(doc_id DIV {self.block_span} AS LONG)").alias(
-                "block_id"
-            ),
-        )
+        return self.docs.where(pred).select("doc_id", self._block_id_col())
 
     def _scored_blocks(
         self, cells: DataFrame, scorer, where, allowed_df: DataFrame | None = None
@@ -1361,8 +1399,9 @@ class TranscriptSearchEngine:
             return empty
         # df lookup for wqt — one tiny pruned-scan job (the reference's
         # dictionary point lookups, query.py:80); its result is a handful
-        # of floats, so folding them into the scoring plan as literals
-        # keeps the main job to two stages (decode+explode, agg+top-k).
+        # of floats, attached to the posting cells as a literal
+        # term -> (qidx, wqt) lookup (_join_query_rows), so scoring is
+        # the pruned scan, one block_id exchange and the top-k stage.
         cells = self._ranked_cells(terms)
         if cells is None:
             return empty
@@ -1385,19 +1424,22 @@ class TranscriptSearchEngine:
         occurrences = self._weighted_occurrences(terms)
         if not occurrences:
             return None
-        wdf = self.spark.createDataFrame(
-            occurrences, "term string, qidx int, wqt double"
-        )
-        return (
-            self._postings_for_terms([t for t, _i, _w in occurrences])
-            .join(F.broadcast(wdf), "term")
-            .select("block_id", "qidx", "wqt", "postings_bin", "weights_bin")
-        )
+        return self._occurrence_cells(occurrences, "weights_bin")
+
+    def _occurrence_cells(
+        self, occurrences: list[tuple[str, int, float]], payload: str
+    ) -> DataFrame:
+        """(block_id, qidx, wqt, postings_bin, ``payload``): the query
+        terms' pruned posting cells, one row per query-term occurrence,
+        with (qidx, wqt) attached as plan literals."""
+        return _join_query_rows(
+            self._postings_for_terms([t for t, _i, _w in occurrences]),
+            occurrences,
+            "term string, qidx int, wqt double",
+        ).select("block_id", "qidx", "wqt", "postings_bin", payload)
 
     def _block_id_col(self) -> Column:
-        return F.expr(f"CAST(doc_id DIV {self.block_span} AS LONG)").alias(
-            "block_id"
-        )
+        return block_id_col(self.block_span)
 
     def _boosts_by_block(self, boost) -> DataFrame:
         """(doc_id, block_id, boost) for docs whose multiplier differs
@@ -1533,14 +1575,7 @@ class TranscriptSearchEngine:
         if not occurrences:
             return empty
         avgdl = self.total_tokens / self.num_docs
-        wdf = self.spark.createDataFrame(
-            occurrences, "term string, qidx int, wqt double"
-        )
-        cells = (
-            self._postings_for_terms([t for t, _i, _w in occurrences])
-            .join(F.broadcast(wdf), "term")
-            .select("block_id", "qidx", "wqt", "postings_bin", "doclens_bin")
-        )
+        cells = self._occurrence_cells(occurrences, "doclens_bin")
         scored = (
             cells.groupBy("block_id")
             .cogroup(self._boosts_by_block(boost).groupBy("block_id"))
@@ -1569,7 +1604,7 @@ class TranscriptSearchEngine:
         per job locally; similar per-job overhead on a real cluster),
         so interactive latency and batch throughput are different
         regimes. Here every (query, term) occurrence becomes a row of
-        one broadcast dimension, the postings scan is pruned to the
+        one plan-literal lookup, the postings scan is pruned to the
         UNION of all query terms, scoring groups by (query_id,
         block_id), and one window takes each query's top-k — total
         cost is one job regardless of batch size.
@@ -1591,27 +1626,13 @@ class TranscriptSearchEngine:
         # an index whose block count round 1 would fully select
         if pruned and -(-self.num_docs // self.block_span) > max(k, 32):
             return self._ranked_batch_wand(len(queries), rows, k)
-        wdf = self.spark.createDataFrame(
-            rows, "query_id int, term string, qidx int, wqt double"
-        )
-        cells = (
-            self._postings_for_terms({r[1] for r in rows})
-            .join(F.broadcast(wdf), "term")
-            .select(
-                "query_id", "block_id", "qidx", "wqt", "postings_bin", "weights_bin"
-            )
-        )
+        cells = self._batch_cells(rows)
         tomb = self.tombstones
         if tomb is not None:
             # each block's tombstones apply to EVERY query in the batch
-            # (fresh DataFrame, not a wdf projection — deriving it from
-            # wdf would make the cogroup an ambiguous self-join)
-            qids = self.spark.createDataFrame(
-                [(qid,) for qid in sorted({r[0] for r in rows})],
-                "query_id int",
-            )
-            tomb_q = tomb.crossJoin(F.broadcast(qids)).select(
-                "query_id", "block_id", "doc_id"
+            qids = F.array(*[F.lit(q) for q in sorted({r[0] for r in rows})])
+            tomb_q = tomb.select(
+                F.explode(qids).alias("query_id"), "block_id", "doc_id"
             )
             scored = (
                 cells.groupBy("query_id", "block_id")
@@ -1660,20 +1681,15 @@ class TranscriptSearchEngine:
         """
         spark = self.spark
         n_probe = max(k, 32)
-        occ = spark.createDataFrame(
-            rows, "query_id int, term string, qidx int, wqt double"
-        )
         by_qt: dict[tuple[int, str], float] = {}
         for qid, t, _i, w in rows:
             by_qt[(qid, t)] = by_qt.get((qid, t), 0.0) + w
-        wdf = spark.createDataFrame(
-            [(q, t, w) for (q, t), w in by_qt.items()],
-            "query_id int, term string, wqt double",
-        )
-        all_terms = {t for _q, t, _i, _w in rows}
         meta = (
-            self._postings_for_terms(all_terms)
-            .join(F.broadcast(wdf), "term")
+            _join_query_rows(
+                self._postings_for_terms({t for _q, t, _i, _w in rows}),
+                [(t, q, w) for (q, t), w in by_qt.items()],
+                "term string, query_id int, wqt double",
+            )
             .groupBy("query_id", "block_id")
             .agg(F.sum(F.col("wqt") * F.col("max_partial")).alias("ub"))
         )
@@ -1695,7 +1711,7 @@ class TranscriptSearchEngine:
                 .select("query_id", "block_id")
                 .collect()
             ]
-            scored = self._score_batch_pairs(occ, all_terms, round1, k)
+            scored = self._score_batch_pairs(rows, round1, k)
             driver_rows = len(scored)
             # running k-th score per query -> round-2 thresholds
             thresholds: list[tuple[int, float]] = []
@@ -1732,7 +1748,7 @@ class TranscriptSearchEngine:
                     .collect()
                 ]
                 if round2:
-                    extra = self._score_batch_pairs(occ, all_terms, round2, k)
+                    extra = self._score_batch_pairs(rows, round2, k)
                     driver_rows += len(extra)
                     for (qid, doc), s in extra.items():
                         tops.setdefault(qid, []).append((doc, s))
@@ -1749,10 +1765,19 @@ class TranscriptSearchEngine:
         }
         return [tops.get(qid, []) for qid in range(n_queries)]
 
+    def _batch_cells(self, rows: list[tuple[int, str, int, float]]) -> DataFrame:
+        """(query_id, block_id, qidx, wqt, postings_bin, weights_bin):
+        the batch's (query, term) occurrence ``rows`` attached as plan
+        literals to the postings scan pruned to the UNION of the terms."""
+        return _join_query_rows(
+            self._postings_for_terms({t for _q, t, _i, _w in rows}),
+            [(t, q, i, w) for q, t, i, w in rows],
+            "term string, query_id int, qidx int, wqt double",
+        ).select("query_id", "block_id", "qidx", "wqt", "postings_bin", "weights_bin")
+
     def _score_batch_pairs(
         self,
-        occ: DataFrame,
-        terms,
+        rows: list[tuple[int, str, int, float]],
         pairs: list[tuple[int, int]],
         k: int | None = None,
     ) -> dict[tuple[int, int], float]:
@@ -1764,13 +1789,8 @@ class TranscriptSearchEngine:
         if not pairs:
             return {}
         sel = self.spark.createDataFrame(pairs, "query_id int, block_id long")
-        cells = (
-            self._postings_for_terms(terms)
-            .join(F.broadcast(occ), "term")
-            .join(F.broadcast(sel), ["query_id", "block_id"], "left_semi")
-            .select(
-                "query_id", "block_id", "qidx", "wqt", "postings_bin", "weights_bin"
-            )
+        cells = self._batch_cells(rows).join(
+            F.broadcast(sel), ["query_id", "block_id"], "left_semi"
         )
         tomb = self.tombstones
         if tomb is not None:
@@ -1824,16 +1844,10 @@ class TranscriptSearchEngine:
         if not occurrences:
             return empty
         avgdl = self.total_tokens / self.num_docs
-        wdf = spark.createDataFrame(
-            occurrences, "term string, qidx int, wqt double"
-        )
-        cells = (
-            self._postings_for_terms([t for t, _i, _w in occurrences])
-            .join(F.broadcast(wdf), "term")
-            .select("block_id", "qidx", "wqt", "postings_bin", "doclens_bin")
-        )
         scored = self._scored_blocks(
-            cells, _block_bm25_scorer(k, k1, b, avgdl), where
+            self._occurrence_cells(occurrences, "doclens_bin"),
+            _block_bm25_scorer(k, k1, b, avgdl),
+            where,
         )
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -1875,11 +1889,17 @@ class TranscriptSearchEngine:
 
     # ---------------------------------------------------------------- boolean
     def boolean_query(self, query: str) -> list[int]:
-        # Arrow toPandas: materializing a large result (a stopword AND
-        # can match most of the corpus) as columnar batches is ~10x
+        # the list is materialized anyway, so the doc set is finished on
+        # the driver: np.unique dedups and sorts the collected per-block
+        # hits — no distinct exchange, no range-sampling job, no sort
+        # exchange. Arrow toPandas: a large result (a stopword AND can
+        # match most of the corpus) arrives as columnar batches, ~10x
         # cheaper than driver-side Row objects from collect()
-        df = self.boolean_query_df(query)
-        return [int(x) for x in df.toPandas()["doc_id"].to_numpy()]
+        hits = self._boolean_hits(query)
+        if hits is None:
+            return []
+        ids = self._mask_deleted(hits).toPandas()["doc_id"].to_numpy()
+        return [int(x) for x in np.unique(ids)]
 
     def boolean_query_iter(self, query: str, batch_rows: int = 10_000):
         """Streaming cursor over a boolean result (reference
@@ -1892,14 +1912,19 @@ class TranscriptSearchEngine:
             yield int(row["doc_id"])
 
     def boolean_query_df(self, query: str) -> DataFrame:
-        literals = [lit.strip() for lit in query.split("+")]
-        literal_dfs = [self._literal_df(lit) for lit in literals]
-        literal_dfs = [d for d in literal_dfs if d is not None]
-        if not literal_dfs:
+        """Distinct matching doc ids, ordered, tombstones masked."""
+        hits = self._boolean_hits(query)
+        if hits is None:
             return self.spark.createDataFrame([], "doc_id long")
-        hits = reduce(DataFrame.union, literal_dfs).distinct()
         # doc-set results post-filter exactly (no top-k involved)
-        return self._mask_deleted(hits).orderBy("doc_id")
+        return self._mask_deleted(hits.distinct()).orderBy("doc_id")
+
+    def _boolean_hits(self, query: str) -> DataFrame | None:
+        """Union of the OR literals' doc sets, duplicates kept (a doc
+        may match several literals); None when no literal survives."""
+        literal_dfs = [self._literal_df(lit.strip()) for lit in query.split("+")]
+        literal_dfs = [d for d in literal_dfs if d is not None]
+        return reduce(DataFrame.union, literal_dfs) if literal_dfs else None
 
     def _literal_df(self, literal: str) -> DataFrame | None:
         """Doc set for one AND literal; None when no conjunct survives."""
@@ -1968,14 +1993,11 @@ class TranscriptSearchEngine:
         (reference ``query.py:143-160``: shift term i's positions by -i,
         intersect) — vectorized per block, see ``_block_phrase``."""
         n = len(terms)
-        qdf = self.spark.createDataFrame(
-            [(t, i) for i, t in enumerate(terms)], "term string, slot int"
-        )
-        cells = (
-            self._postings_for_terms(terms)
-            .join(F.broadcast(qdf), "term")
-            .select("block_id", "slot", "postings_bin", "positions_bin")
-        )
+        cells = _join_query_rows(
+            self._postings_for_terms(terms),
+            [(t, i) for i, t in enumerate(terms)],
+            "term string, slot int",
+        ).select("block_id", "slot", "postings_bin", "positions_bin")
         return cells.groupBy("block_id").applyInPandas(
             _block_phrase(n, self.block_span), "doc_id long"
         )
@@ -2082,15 +2104,9 @@ class TranscriptSearchEngine:
             payload = "weights_bin"
         if not occurrences:
             return empty
-        wdf = self.spark.createDataFrame(
-            occurrences, "term string, qidx int, wqt double"
+        scored = self._scored_blocks(
+            self._occurrence_cells(occurrences, payload), scorer, where
         )
-        cells = (
-            self._postings_for_terms([t for t, _i, _w in occurrences])
-            .join(F.broadcast(wdf), "term")
-            .select("block_id", "qidx", "wqt", "postings_bin", payload)
-        )
-        scored = self._scored_blocks(cells, scorer, where)
         keyed = scored.join(self.docs.select("doc_id", "conv_id"), "doc_id")
         best = F.max(F.struct(F.col("score"), (-F.col("doc_id")).alias("neg_id")))
         rolled = (
@@ -2243,7 +2259,13 @@ class TranscriptSearchEngine:
         terms dictionary, N / fg_n folded as literals. At 100 TB a
         selective query touches the few posting blocks its foreground
         occupies; the re-analyze-everything plan of the relational twin
-        is exactly what this method exists to avoid."""
+        is exactly what this method exists to avoid.
+
+        EAGER, unlike the other ``*_df`` methods: the foreground count
+        and the top-``n`` run as Spark jobs inside this call, and the
+        returned DataFrame holds the ``n`` collected rows (a driver-side
+        relation, not a lazy plan) — so the persisted foreground set is
+        released before returning."""
         qt = sorted({t for t in self._ranked_terms(query) if t})
         schema = "term string, fg_df long, df long, score double"
         empty = self.spark.createDataFrame([], schema)
@@ -2312,9 +2334,15 @@ class TranscriptSearchEngine:
         # (new attribute ids — Spark's ambiguous-self-join check rejects
         # cogrouping two projections of one Dataset); column pruning
         # keeps this scan to the term/block_id columns only
-        slim = self.spark.read.parquet(
-            fsio.join(self.index_dir, self._table_names.get("postings", "postings"))
-        ).select("block_id", "term")
+        slim = (
+            self.spark.read.schema(TABLE_SCHEMAS["postings"])
+            .parquet(
+                fsio.join(
+                    self.index_dir, self._table_names.get("postings", "postings")
+                )
+            )
+            .select("block_id", "term")
+        )
         dfs_by_block = slim.join(self.terms.select("term", "df"), "term").select(
             "block_id", "term", "df"
         )
@@ -2406,13 +2434,14 @@ class TranscriptSearchEngine:
         ext = cells.mapInPandas(
             extract, "doc_id long, term string, tf long, weight double"
         )
-        qdf = self.spark.createDataFrame(
+        ext = _join_query_rows(
+            ext,
             [(t, int(dfs[t]), int(mult[t])) for t in present],
             "term string, df long, mult long",
         )
         wqt = F.log(F.lit(1.0) + F.lit(float(self.num_docs)) / F.col("df"))
         wdt = F.lit(1.0) + F.log("tf")
-        return ext.join(F.broadcast(qdf), "term").select(
+        return ext.select(
             "doc_id",
             "term",
             "tf",
@@ -2477,12 +2506,11 @@ class TranscriptSearchEngine:
         empty = self.spark.createDataFrame([], "doc_id long, score double")
         if not mapping:
             return empty
-        qdf = self.spark.createDataFrame(mapping, "term string, gid int")
-        gcells = (
-            self._postings_for_terms([t for t, _ in mapping])
-            .join(F.broadcast(qdf), "term")
-            .select("block_id", "gid", "term", "postings_bin")
-        )
+        gcells = _join_query_rows(
+            self._postings_for_terms([t for t, _ in mapping]),
+            mapping,
+            "term string, gid int",
+        ).select("block_id", "gid", "term", "postings_bin")
         gdf_rows = (
             gcells.groupBy("block_id")
             .applyInPandas(_block_group_union(), "gid int, df long")
@@ -2494,18 +2522,11 @@ class TranscriptSearchEngine:
         if not gdfs:
             return empty
         live = [(t, gi) for t, gi in mapping if gi in gdfs]
-        wdf = self.spark.createDataFrame(
-            [
-                (t, gi, float(log(1 + self.num_docs / gdfs[gi])))
-                for t, gi in live
-            ],
+        cells = _join_query_rows(
+            self._postings_for_terms([t for t, _ in live]),
+            [(t, gi, float(log(1 + self.num_docs / gdfs[gi]))) for t, gi in live],
             "term string, gid int, wqt double",
-        )
-        cells = (
-            self._postings_for_terms([t for t, _ in live])
-            .join(F.broadcast(wdf), "term")
-            .select("block_id", "gid", "wqt", "postings_bin", "weights_bin")
-        )
+        ).select("block_id", "gid", "wqt", "postings_bin", "weights_bin")
         scored = self._scored_blocks(cells, _block_synonym_scorer(k), None)
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -2609,9 +2630,14 @@ class TranscriptSearchEngine:
         corpus-sized work is the varbyte decode. Stats are
         corpus-global (tombstoned docs included until compaction — the
         Lucene deleted-docs discipline the other analytics paths
-        follow). The pair table persists across its two consumers
-        (the n_pairs total and the final top-k) and is unpersisted
-        before returning the collected k rows."""
+        follow).
+
+        EAGER, unlike the other ``*_df`` methods: the decode pass, the
+        pair total and the top-``k`` run as Spark jobs inside this
+        call, and the returned DataFrame holds the ``k`` collected rows
+        (a driver-side relation, not a lazy plan). The pair table
+        persists across its two consumers (the n_pairs total and the
+        final top-k) and is unpersisted before returning."""
         schema = "term_a string, term_b string, n_pair long, pmi double"
         empty = self.spark.createDataFrame([], schema)
         cells = self.postings.select(

@@ -368,7 +368,7 @@ def fsck_index(
     if deep:
         stats_by_block = eng.doc_stats.select(
             "doc_id",
-            (F.col("doc_id") / F.lit(eng.block_span)).cast("long").alias("block_id"),
+            eng._block_id_col(),
             "weight",
             "doc_len",
         )

@@ -35,18 +35,25 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    Local-mode defaults follow the sandbox contract: ``local[$SPARK_GRAFT_CPUS]``
-    with shuffle partitions matched to cores (not the 200 default), AQE on
-    (runtime coalescing + skew-join splitting — our hot-term shuffles need it),
-    Arrow enabled (every UDF in this engine is Arrow-batched).
+    Local-mode defaults fit the host: ``local[<cores this process may
+    run on>]`` with shuffle partitions matched to cores (not the 200
+    default) and a driver of a quarter of physical RAM; the
+    ``SPARK_GRAFT_CPUS``, ``SPARK_GRAFT_MASTER``, ``SPARK_GRAFT_SHUFFLE``
+    and ``SPARK_GRAFT_DRIVER_MEM`` environment variables override them.
+    AQE on (runtime coalescing + skew-join splitting — our hot-term
+    shuffles need it), Arrow enabled (every UDF in this engine is
+    Arrow-batched).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     if master is None:
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
     if driver_memory is None:
-        driver_memory = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        driver_memory = os.environ.get(
+            "SPARK_GRAFT_DRIVER_MEM", f"{ram // 4 >> 20}m"
+        )
 
     builder = (
         SparkSession.builder.appName(app_name)

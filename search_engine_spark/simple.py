@@ -271,7 +271,13 @@ def bm25f_score_topk(
     and ``clen_long (conv_id, role, flen)`` — pivoted here into
     per-(term, role) integer columns and scored through one fixed-order
     expression tree (sorted roles / sorted terms), so the float result
-    is bit-identical for any producer of the same integers."""
+    is bit-identical for any producer of the same integers.
+
+    EAGER: the corpus scalars (conversation count, field-length totals,
+    per-term dfs) and the top-``k`` run as Spark jobs inside this call,
+    and the returned DataFrame holds the ``k`` collected rows (a
+    driver-side relation, not a lazy plan) — so the persisted
+    per-conversation tables are released before returning."""
     from pyspark import StorageLevel
 
     if not qt:

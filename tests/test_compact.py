@@ -6,7 +6,8 @@ import os
 
 from pyspark.sql import functions as F
 
-from search_engine_spark.build import IndexBuilder
+from search_engine_spark import fsio
+from search_engine_spark.build import TABLE_SCHEMAS, IndexBuilder
 from search_engine_spark.engine import TranscriptSearchEngine
 from search_engine_spark.fixtures import synthetic_transcripts
 from search_engine_spark.operators.docids import with_doc_ids
@@ -79,3 +80,38 @@ def test_compact_preserves_results_and_cleans(spark, tmp_path):
     assert eng2.num_docs == before["num_docs"] + 4
     assert "postings_c0002" in set(os.listdir(idx))
     assert "postings_c0001" not in set(os.listdir(idx))
+
+
+def test_declared_schemas_match_written_tables(spark, tmp_path):
+    """``TABLE_SCHEMAS`` (what readers open tables with, skipping schema
+    inference) must equal the inferred schema of every live table after
+    each writer: build, append, delete, compact."""
+    idx = str(tmp_path / "idx")
+    builder = IndexBuilder(spark, idx, block_span=16)
+    checked: set[str] = set()
+
+    def check():
+        meta = fsio.read_json_atomic(spark, os.path.join(idx, "_meta.json"))
+        physical = {
+            **meta["tables"],
+            "terms": meta["terms_table"],
+            "tombstones": meta.get("tombstones_table"),
+        }
+        for table, declared in TABLE_SCHEMAS.items():
+            if physical[table] is None:
+                continue
+            path = os.path.join(idx, physical[table])
+            inferred = spark.read.parquet(path).schema
+            opened = spark.read.schema(declared).parquet(path).schema
+            assert opened == inferred, (table, inferred.simpleString())
+            checked.add(table)
+
+    builder.build(synthetic_transcripts(spark, n_convs=6, turns_per_conv=4))
+    check()
+    builder.append(synthetic_transcripts(spark, n_convs=3, turns_per_conv=4))
+    check()
+    builder.delete([0, 5, 17])
+    check()
+    builder.compact()
+    check()
+    assert checked == set(TABLE_SCHEMAS)

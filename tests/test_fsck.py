@@ -11,7 +11,9 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from search_engine_spark.build import IndexBuilder
+from pyspark.sql import functions as F
+
+from search_engine_spark.build import IndexBuilder, block_id_col
 from search_engine_spark.fixtures import synthetic_transcripts
 from search_engine_spark.fsck import fsck_index
 
@@ -219,3 +221,20 @@ def test_fsck_detects_dangling_tombstone(spark, tmp_path):
     _patch_parquet(tf, add_dangler)
     rep = _report(spark, idx)
     assert rep["tombstones"][1] >= 1
+
+
+def test_block_id_is_integer_division(spark):
+    """The deep pass keys doc_stats by the engine's integer block id:
+    a float ``doc_id / block_span`` rounds ids above 2^53 into the
+    wrong block."""
+    doc_id = 2**53 + 1
+    row = (
+        spark.createDataFrame([(doc_id,)], "doc_id long")
+        .select(
+            (F.col("doc_id") / F.lit(3)).cast("long").alias("float_div"),
+            block_id_col(3),
+        )
+        .first()
+    )
+    assert row["block_id"] == doc_id // 3
+    assert row["float_div"] != doc_id // 3

@@ -10,6 +10,7 @@ answers.
 
 import io
 import contextlib
+import itertools
 
 import pytest
 from pyspark.sql import functions as F
@@ -337,3 +338,58 @@ def test_filtered_wand_unsupported(cold_engine):
         cold_engine.ranked_query("test", pruned=True, where="role = 'user'")
     with _pytest.raises(NotImplementedError):
         cold_engine.bm25_query("test", pruned=True, where="role = 'user'")
+
+
+_JOB_GROUPS = itertools.count()
+
+
+def _job_count(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, read from the status tracker by job
+    group (AQE's stage jobs inherit the caller's group)."""
+    sc = spark.sparkContext
+    group = f"job-count-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+
+def test_query_job_counts(spark, cold_engine):
+    """A warm query runs its dictionary lookup, the pruned scan's
+    block_id exchange and the result stage — no broadcast job for the
+    query terms, and boolean doc sets finish on the driver (no distinct
+    exchange, no range-sampling or sort job)."""
+    eng = cold_engine
+    assert eng.tombstones is None
+    eng.ranked_query("test document")  # warm: dictionary cached
+    eng.boolean_query('"test document"')
+    counts = {
+        "ranked": _job_count(spark, lambda: eng.ranked_query("test document")),
+        "bm25": _job_count(spark, lambda: eng.bm25_query("test document")),
+        "wand": _job_count(
+            spark, lambda: eng.ranked_query("test document", pruned=True)
+        ),
+        "and": _job_count(spark, lambda: eng.boolean_query("test document")),
+        "phrase": _job_count(spark, lambda: eng.boolean_query('"test document"')),
+    }
+    bounds = {"ranked": 3, "bm25": 3, "wand": 3, "and": 2, "phrase": 2}
+    assert all(counts[q] <= bounds[q] for q in bounds), counts
+
+
+def test_query_constants_are_plan_literals(spark, cold_engine):
+    """Query-term rows (qidx/wqt, phrase slots) attach as a literal
+    lookup: the executed plans hold no parallelized driver rows and no
+    broadcast exchange."""
+    eng = cold_engine
+    for name, df in [
+        ("ranked", eng.ranked_query_df("test document")),
+        ("bm25", eng.bm25_query_df("test document")),
+        ("phrase", eng._phrase_df(["test", "document"])),
+    ]:
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Scan ExistingRDD" not in plan, name
+        assert "BroadcastExchange" not in plan, name
