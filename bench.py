@@ -55,7 +55,6 @@ def cpu_probe() -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
 
     from pyspark.sql import functions as F
@@ -84,11 +83,8 @@ def main() -> None:
 
     probes: dict[str, float] = {"pre": cpu_probe()}
 
-    spark = get_spark(
-        app_name="search-engine-bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-    )
+    # get_spark sizes the session to the host (SPARK_GRAFT_CPUS overrides)
+    spark = get_spark(app_name="search-engine-bench")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     events = spark.read.parquet(f"{sf_dir}/events.parquet")

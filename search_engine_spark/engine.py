@@ -30,7 +30,7 @@ from functools import reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -79,117 +79,136 @@ def _join_query_rows(df: DataFrame, rows, schema: str) -> DataFrame:
     )
 
 
-def _block_scorer(k: int | None):
-    """Per-block exhaustive scorer for ``applyInPandas``.
+def _qidx_cells(cells: pd.DataFrame, payload: str):
+    """(docs, tfs, wqt, ``payload`` bytes) per query-term cell, in qidx
+    order — the reference's term-at-a-time addition order
+    (``query.py:78-83``)."""
+    for i in np.argsort(cells["qidx"].to_numpy(), kind="stable"):
+        d, t = codec.decode_postings(bytes(cells["postings_bin"].iloc[i]))
+        yield d, t, cells["wqt"].iloc[i], bytes(cells[payload].iloc[i])
 
-    Input rows: one per (query term, this block) with wqt, qidx and the
-    encoded postings/weights. Output: (doc_id, score) for the block —
-    the block's top-k when ``k`` is set (tie-break doc_id asc, matching
-    ``diskindex.py:98-99``), or every scored doc when ``k`` is None.
-    Blocks partition the doc space, so a doc's score is COMPLETE within
-    its block and the global top-k is a subset of the union of
-    per-block top-ks — every top-k consumer (exhaustive DataFrame path,
-    WAND scoring rounds) passes ``k`` and ships k rows per block, never
-    the block's full doc range.
-    """
 
-    def score(
-        pdf: pd.DataFrame,
-        *,
-        allowed: np.ndarray | None = None,
-        blocked: np.ndarray | None = None,
-    ) -> pd.DataFrame:
-        order = np.argsort(pdf["qidx"].to_numpy(), kind="stable")
-        doc_parts, partial_parts, weight_parts = [], [], []
-        for i in order:
-            d, t = codec.decode_postings(bytes(pdf["postings_bin"].iloc[i]))
-            w = np.frombuffer(bytes(pdf["weights_bin"].iloc[i]), dtype="<f8")
-            doc_parts.append(d)
-            partial_parts.append(pdf["wqt"].iloc[i] * (1.0 + np.log(t)))
-            weight_parts.append(w)
-        docs = np.concatenate(doc_parts)
-        partials = np.concatenate(partial_parts)
-        weights = np.concatenate(weight_parts)
-        if allowed is not None:
-            # predicate filtering happens BEFORE top-k truncation — a
-            # filtered-out doc must never occupy a top-k slot
-            keep = np.isin(docs, allowed)
-            docs, partials, weights = docs[keep], partials[keep], weights[keep]
-        if blocked is not None and blocked.size:
-            # tombstone masking, also pre-top-k: a deleted doc must
-            # neither occupy a slot nor inflate the WAND threshold
-            keep = ~np.isin(docs, blocked)
-            docs, partials, weights = docs[keep], partials[keep], weights[keep]
+def _tfidf_partials(cells: pd.DataFrame):
+    """tf-idf weights of a block's cells: partial = wqt * (1 + ln tf),
+    norm = the posting's L_d (``weights_bin`` — it rides inside the
+    block, so scoring needs no doc_stats join)."""
+    docs, parts, norms = zip(
+        *[
+            (d, wqt * (1.0 + np.log(t)), np.frombuffer(w, dtype="<f8"))
+            for d, t, wqt, w in _qidx_cells(cells, "weights_bin")
+        ]
+    )
+    return np.concatenate(docs), np.concatenate(parts), np.concatenate(norms)
+
+
+def _bm25_partials(k1: float, b: float, avgdl: float):
+    """Okapi BM25 weights: partial = wqt * tf*(k1+1) / (tf + k1*(1 - b +
+    b*dl/avgdl)) with wqt = idf; doc lengths ride inside the block
+    (``doclens_bin``). BM25 has no norm."""
+
+    def partials(cells: pd.DataFrame):
+        docs, parts = [], []
+        for d, t, wqt, dl_bin in _qidx_cells(cells, "doclens_bin"):
+            dl = codec.vb_decode(dl_bin).astype(np.float64)
+            docs.append(d)
+            parts.append(wqt * (t * (k1 + 1.0)) / (t + k1 * (1.0 - b + b * dl / avgdl)))
+        return np.concatenate(docs), np.concatenate(parts), None
+
+    return partials
+
+
+def _synonym_partials(cells: pd.DataFrame):
+    """Synonym-group weights (Lucene ``SynonymQuery``): each group of
+    stems is ONE pseudo-term — ``gtf`` = sum of member tfs per doc,
+    partial = the group's wqt (from its ANY-member df) * (1 + ln gtf),
+    norm = the in-block L_d. Groups fold in ascending ``gid`` (a fixed
+    order, so the float result is reproducible cross-engine)."""
+    docs, parts, norms = [], [], []
+    for _gid, g in cells.groupby("gid", sort=True):
+        dec = [codec.decode_postings(bytes(p)) for p in g["postings_bin"]]
+        d = np.concatenate([x[0] for x in dec])
+        tf = np.concatenate([x[1] for x in dec]).astype(np.float64)
+        w = np.concatenate(
+            [np.frombuffer(bytes(x), dtype="<f8") for x in g["weights_bin"]]
+        )
+        uq, inv = np.unique(d, return_inverse=True)
+        gtf = np.zeros(uq.size)
+        np.add.at(gtf, inv, tf)  # integer tfs: exact in float64
+        ld = np.empty(uq.size)
+        ld[inv] = w
+        docs.append(uq)
+        parts.append(float(g["wqt"].iloc[0]) * (1.0 + np.log(gtf)))
+        norms.append(ld)
+    return np.concatenate(docs), np.concatenate(parts), np.concatenate(norms)
+
+
+def _block_topk(
+    partials, k: int | None, restrict: bool = False, per_group: int | None = None
+):
+    """The per-block ranked-scoring kernel, ``run(key, cells, side=None)``
+    for a grouped-map or cogroup ``applyInPandas``.
+
+    ``partials(cells) -> (docs, partials, norms)`` decodes the block's
+    query-term cells; each doc's partials add in that order
+    (``np.add.at`` is sequential) and divide by its norm, if any. Blocks
+    partition the doc space, so a doc's score is COMPLETE within its
+    block and the global top-k is a subset of the union of per-block
+    top-ks: with ``k`` set a block ships k rows, never its full doc
+    range.
+
+    ``side`` is the block's modifiers table ``(doc_id, boost[,
+    group_key])``: a NULL boost drops the doc (tombstone) even beside a
+    boost row, any other boost multiplies the normalized score (the
+    BM25F-style field weight on the whole-doc score); with ``restrict``
+    a doc without a side row drops (``where=`` survivors, phrase
+    candidates, diversity groups); ``per_group`` keeps the best
+    ``per_group`` docs of each group_key. All of it happens BEFORE the
+    top-k cut, ordered by (score desc, doc_id asc — ``diskindex.py:98-99``):
+    a filtered or deleted doc must neither occupy a slot nor, on the WAND
+    rounds, inflate the pruning threshold, and a boosted doc must be able
+    to displace an unboosted one. Masking drops whole docs, so every
+    survivor's addition order and float score are unchanged. Docs
+    without a side row keep weight 1.0, so the side stays O(boosted
+    docs + tombstones) per block unless it restricts.
+
+    A (query_id, block_id) ``key`` re-attaches query_id to the rows."""
+
+    def run(key, cells: pd.DataFrame, side: pd.DataFrame | None = None) -> pd.DataFrame:
+        if len(cells):
+            docs, parts, norms = partials(cells)
+        else:  # a cogroup group with side rows only
+            docs, parts, norms = np.empty(0, dtype=np.int64), np.empty(0), None
         uniq, inv = np.unique(docs, return_inverse=True)
-        acc = np.zeros(uniq.size)
-        np.add.at(acc, inv, partials)  # sequential adds in qidx order
-        ld = np.empty(uniq.size)
-        ld[inv] = weights  # every occurrence carries the same L_d
-        scores = acc / ld
-        idx = np.lexsort((uniq, -scores))  # score desc, doc_id asc
+        scores = np.zeros(uniq.size)
+        np.add.at(scores, inv, parts)
+        if norms is not None:
+            ld = np.empty(uniq.size)
+            ld[inv] = norms  # every occurrence carries the same L_d
+            scores = scores / ld
+        keep = np.ones(uniq.size, dtype=bool)
+        if side is not None:
+            dead = side["boost"].isna().to_numpy()
+            keep = ~np.isin(uniq, side["doc_id"].to_numpy()[dead])
+            mods = side[~dead].set_index("doc_id").reindex(uniq)
+            if restrict:
+                keep &= mods["boost"].notna().to_numpy()
+            scores = scores * mods["boost"].fillna(1.0).to_numpy()
+        live = np.flatnonzero(keep)
+        idx = live[np.lexsort((uniq[live], -scores[live]))]
+        if per_group is not None:
+            groups = mods["group_key"].to_numpy()
+            capped = pd.Series(groups[idx]).groupby(groups[idx], sort=False).cumcount()
+            idx = idx[capped.to_numpy() < per_group]
         if k is not None:
             idx = idx[:k]
-        return pd.DataFrame({"doc_id": uniq[idx], "score": scores[idx]})
-
-    return score
-
-
-def _block_scorer_keyed(k: int | None):
-    """``_block_scorer`` for (query_id, block_id) groups — the batch
-    path scores every query's blocks in ONE job; the key's query_id is
-    re-attached to the output rows."""
-    inner = _block_scorer(k)
-
-    def score(key, pdf):
-        out = inner(pdf)
-        out.insert(0, "query_id", int(key[0]))
+        out = pd.DataFrame({"doc_id": uniq[idx], "score": scores[idx]})
+        if per_group is not None:
+            out.insert(1, "group_key", groups[idx])
+        if len(key) == 2:
+            out.insert(0, "query_id", int(key[0]))
         return out
 
-    return score
-
-
-def _block_bm25_scorer(k: int | None, k1: float, b: float, avgdl: float):
-    """Per-block BM25 scorer for ``applyInPandas``.
-
-    partial = wqt * tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl)) with
-    wqt = idf; doc lengths ride inside the block (``doclens_bin``), so
-    scoring needs no doc_stats join. Accumulation in qidx order,
-    tie-break doc_id asc — same discipline as the tf-idf scorer.
-    """
-
-    def score(
-        pdf: pd.DataFrame,
-        *,
-        allowed: np.ndarray | None = None,
-        blocked: np.ndarray | None = None,
-    ) -> pd.DataFrame:
-        order = np.argsort(pdf["qidx"].to_numpy(), kind="stable")
-        doc_parts, partial_parts = [], []
-        for i in order:
-            d, t = codec.decode_postings(bytes(pdf["postings_bin"].iloc[i]))
-            dl = codec.vb_decode(bytes(pdf["doclens_bin"].iloc[i])).astype(
-                np.float64
-            )
-            denom = t + k1 * (1.0 - b + b * dl / avgdl)
-            doc_parts.append(d)
-            partial_parts.append(pdf["wqt"].iloc[i] * (t * (k1 + 1.0)) / denom)
-        docs = np.concatenate(doc_parts)
-        partials = np.concatenate(partial_parts)
-        if allowed is not None:
-            keep = np.isin(docs, allowed)
-            docs, partials = docs[keep], partials[keep]
-        if blocked is not None and blocked.size:
-            keep = ~np.isin(docs, blocked)
-            docs, partials = docs[keep], partials[keep]
-        uniq, inv = np.unique(docs, return_inverse=True)
-        acc = np.zeros(uniq.size)
-        np.add.at(acc, inv, partials)
-        idx = np.lexsort((uniq, -acc))
-        if k is not None:
-            idx = idx[:k]
-        return pd.DataFrame({"doc_id": uniq[idx], "score": acc[idx]})
-
-    return score
+    return run
 
 
 def _block_set_op(n_required: int | None):
@@ -302,176 +321,6 @@ def _block_colloc_pairs(block_span: int):
         )
         out["cnt"] = out["cnt"].astype("int64")
         return out[["term_a", "term_b", "cnt"]]
-
-    return run
-
-
-def _cogroup_filtered(scorer):
-    """Adapter turning a block scorer into a ``cogroup().applyInPandas``
-    worker for metadata-filtered retrieval: the left side is the
-    block's (query term, postings) cells, the right side is the
-    block's ALLOWED doc_ids (the docs-table predicate's survivors,
-    co-shuffled by block_id). The scorer masks candidates against the
-    allowed set before its per-block top-k — filtering happens before
-    truncation, so a filtered-out doc can never displace an allowed
-    one. A block with no allowed docs (or, for a stopword-free
-    predicate column, no query-term cells) short-circuits to empty."""
-
-    def run(cells: pd.DataFrame, allowed: pd.DataFrame) -> pd.DataFrame:
-        if len(cells) == 0 or len(allowed) == 0:
-            return pd.DataFrame(
-                {
-                    "doc_id": np.empty(0, dtype=np.int64),
-                    "score": np.empty(0, dtype=np.float64),
-                }
-            )
-        return scorer(cells, allowed=allowed["doc_id"].to_numpy())
-
-    return run
-
-
-def _cogroup_blocked(scorer):
-    """Adapter turning a block scorer into a ``cogroup().applyInPandas``
-    worker for tombstone masking: the left side is the block's (query
-    term, postings) cells, the right side is the block's DELETED
-    doc_ids (the tombstone snapshot, co-shuffled by block_id so each
-    worker sees exactly the deletions that can touch its docs). The
-    scorer drops deleted candidates BEFORE its per-block top-k — a
-    deleted doc must neither occupy a top-k slot nor (on the WAND
-    scoring rounds) inflate the pruning threshold, which would
-    over-prune live results. A block with no tombstones scores
-    untouched; a tombstone-only group (no cells) short-circuits."""
-
-    def run(cells: pd.DataFrame, tomb: pd.DataFrame) -> pd.DataFrame:
-        if len(cells) == 0:
-            return pd.DataFrame(
-                {
-                    "doc_id": np.empty(0, dtype=np.int64),
-                    "score": np.empty(0, dtype=np.float64),
-                }
-            )
-        blocked = tomb["doc_id"].to_numpy() if len(tomb) else None
-        return scorer(cells, blocked=blocked)
-
-    return run
-
-
-def _cogroup_blocked_keyed(k: int | None):
-    """Tombstone-masked :func:`_block_scorer_keyed` — the batch paths'
-    (query_id, block_id)-keyed groups, cogrouped with that pair's
-    tombstones (the per-block tombstone set joined to each query id)."""
-    inner = _block_scorer(k)
-
-    def run(key, cells: pd.DataFrame, tomb: pd.DataFrame) -> pd.DataFrame:
-        if len(cells) == 0:
-            return pd.DataFrame(
-                {
-                    "query_id": np.empty(0, dtype=np.int32),
-                    "doc_id": np.empty(0, dtype=np.int64),
-                    "score": np.empty(0, dtype=np.float64),
-                }
-            )
-        blocked = tomb["doc_id"].to_numpy() if len(tomb) else None
-        out = inner(cells, blocked=blocked)
-        out.insert(0, "query_id", int(key[0]))
-        return out
-
-    return run
-
-
-def _cogroup_boosted(k: int | None, scorer_factory=None):
-    """Field/metadata-boosted scoring adapter: the right cogroup side
-    carries this block's (doc_id, boost) rows for docs whose boost
-    multiplier differs from 1.0, plus boost-NULL rows for tombstoned
-    docs (one co-shuffled side encodes both, see
-    :meth:`TranscriptSearchEngine._boosts_by_block`). The scorer
-    (tf-idf by default; any ``_block_*_scorer`` factory, e.g. BM25)
-    runs un-truncated (k=None — every doc's base score is complete
-    within its block), boosts multiply AFTER the base-score
-    normalization (the BM25F-style "field weight on the whole-doc
-    score" form), and ONLY THEN the per-block top-k applies — a
-    boosted doc must be able to displace an unboosted one and vice
-    versa, so truncation before the multiply would be wrong. Docs
-    without a boost row keep weight 1.0; at scale the right side is
-    O(boosted docs + tombstones) per block, not O(corpus)."""
-    inner = (scorer_factory or _block_scorer)(None)
-
-    def run(cells: pd.DataFrame, boosts: pd.DataFrame) -> pd.DataFrame:
-        if len(cells) == 0:
-            return pd.DataFrame(
-                {
-                    "doc_id": np.empty(0, dtype=np.int64),
-                    "score": np.empty(0, dtype=np.float64),
-                }
-            )
-        blocked = None
-        if len(boosts):
-            dead = boosts.loc[boosts["boost"].isna(), "doc_id"].to_numpy()
-            if dead.size:
-                blocked = dead
-        out = inner(cells, blocked=blocked)
-        if len(boosts):
-            live = boosts.dropna(subset=["boost"])
-            if len(live):
-                m = out.merge(
-                    live[["doc_id", "boost"]], on="doc_id", how="left"
-                )
-                out["score"] = (
-                    out["score"].to_numpy()
-                    * m["boost"].fillna(1.0).to_numpy()
-                )
-        out = out.sort_values(
-            ["score", "doc_id"], ascending=[False, True], kind="mergesort"
-        )
-        if k is not None:
-            out = out.head(k)
-        return out
-
-    return run
-
-
-def _cogroup_diverse(k: int, per_group: int):
-    """Diversified (per-group-capped) top-k adapter: at most
-    ``per_group`` results from any one group (conversation) in the
-    final ranking. The right side maps this block's docs to their
-    group keys; the merge is INNER, so docs absent from it (tombstoned
-    ids are anti-joined out upstream) drop out before ranking.
-
-    Correctness of the per-block cap: order docs by the total order
-    (score desc, doc_id asc). If doc d belongs to the global
-    diversified top-k, then (a) d is among the global top
-    ``per_group`` of its group, hence also among the top ``per_group``
-    of its group's docs WITHIN ITS BLOCK (ranking within a subset can
-    only improve), so d survives the per-(block, group) cap; and (b)
-    for every block-capped survivor e ahead of d, e's group's global
-    top-``per_group`` contains a doc ahead of e (pointwise: the
-    group's global j-th best beats its block-local j-th best), giving
-    an injection from block survivors ahead of d into GLOBAL
-    diversified candidates ahead of d — fewer than k of those exist,
-    so d is inside the block's top-k too. The global re-cap + top-k
-    over the n_blocks*k survivors happens in the DataFrame plan
-    (window + limit over tiny rows)."""
-    inner = _block_scorer(None)
-
-    def run(cells: pd.DataFrame, groups: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "doc_id": np.empty(0, dtype=np.int64),
-                "group_key": np.empty(0, dtype=object),
-                "score": np.empty(0, dtype=np.float64),
-            }
-        )
-        if len(cells) == 0 or len(groups) == 0:
-            return empty
-        out = inner(cells)
-        m = out.merge(groups[["doc_id", "group_key"]], on="doc_id", how="inner")
-        if not len(m):
-            return empty
-        m = m.sort_values(
-            ["score", "doc_id"], ascending=[False, True], kind="mergesort"
-        )
-        m = m[m.groupby("group_key", sort=False).cumcount() < per_group]
-        return m.head(k)[["doc_id", "group_key", "score"]]
 
     return run
 
@@ -605,69 +454,6 @@ def _cogroup_keywords(n: int, n_docs: float):
         )
 
     return run
-
-
-def _block_synonym_scorer(k: int | None):
-    """Per-block synonym-group scorer (Lucene ``SynonymQuery``): each
-    group of stems scores as ONE pseudo-term — ``gtf = sum`` of member
-    tfs per doc, weighted by the group's pre-computed ``wqt`` (from the
-    group's ANY-member df). Accumulation per doc runs in ascending
-    ``gid`` order (a fixed fold, so the float result is reproducible
-    cross-engine), normalization by the in-block L_d, tie-break doc_id
-    asc — the :func:`_block_scorer` discipline with group-tf blending
-    in front. ``allowed``/``blocked`` kwargs keep it pluggable into
-    the filter/tombstone cogroup adapters."""
-
-    def score(
-        pdf: pd.DataFrame,
-        *,
-        allowed: np.ndarray | None = None,
-        blocked: np.ndarray | None = None,
-    ) -> pd.DataFrame:
-        per_gid: dict[int, list[tuple[np.ndarray, np.ndarray, np.ndarray]]] = {}
-        wqt_by_gid: dict[int, float] = {}
-        for gid, wqt, pblob, wblob in zip(
-            pdf["gid"], pdf["wqt"], pdf["postings_bin"], pdf["weights_bin"]
-        ):
-            d, t = codec.decode_postings(bytes(pblob))
-            w = np.frombuffer(bytes(wblob), dtype="<f8")
-            per_gid.setdefault(int(gid), []).append((d, t, w))
-            wqt_by_gid[int(gid)] = float(wqt)
-        doc_parts, partial_parts, weight_parts = [], [], []
-        for gid in sorted(per_gid):
-            parts = per_gid[gid]
-            docs_g = np.concatenate([p[0] for p in parts])
-            tfs_g = np.concatenate([p[1] for p in parts]).astype(np.float64)
-            w_g = np.concatenate([p[2] for p in parts])
-            uq, inv = np.unique(docs_g, return_inverse=True)
-            gtf = np.zeros(uq.size)
-            np.add.at(gtf, inv, tfs_g)  # integer tfs: exact in float64
-            ld = np.empty(uq.size)
-            ld[inv] = w_g
-            doc_parts.append(uq)
-            partial_parts.append(wqt_by_gid[gid] * (1.0 + np.log(gtf)))
-            weight_parts.append(ld)
-        docs = np.concatenate(doc_parts)
-        partials = np.concatenate(partial_parts)
-        weights = np.concatenate(weight_parts)
-        if allowed is not None:
-            keep = np.isin(docs, allowed)
-            docs, partials, weights = docs[keep], partials[keep], weights[keep]
-        if blocked is not None and blocked.size:
-            keep = ~np.isin(docs, blocked)
-            docs, partials, weights = docs[keep], partials[keep], weights[keep]
-        uniq, inv = np.unique(docs, return_inverse=True)
-        acc = np.zeros(uniq.size)
-        np.add.at(acc, inv, partials)  # gid-ascending addition order
-        ld = np.empty(uniq.size)
-        ld[inv] = weights
-        scores = acc / ld
-        idx = np.lexsort((uniq, -scores))
-        if k is not None:
-            idx = idx[:k]
-        return pd.DataFrame({"doc_id": uniq[idx], "score": scores[idx]})
-
-    return score
 
 
 def _block_group_union():
@@ -1128,8 +914,8 @@ class TranscriptSearchEngine:
         return self._wand_topk(
             occurrences,
             row_ub=F.col("wqt") * F.col("max_partial"),
-            scorer_factory=_block_scorer,
-            payload_cols=("postings_bin", "weights_bin"),
+            partials=_tfidf_partials,
+            payload="weights_bin",
             k=k,
         )
 
@@ -1162,8 +948,8 @@ class TranscriptSearchEngine:
         return self._wand_topk(
             occurrences,
             row_ub=row_ub,
-            scorer_factory=lambda kk: _block_bm25_scorer(kk, k1, b, avgdl),
-            payload_cols=("postings_bin", "doclens_bin"),
+            partials=_bm25_partials(k1, b, avgdl),
+            payload="doclens_bin",
             k=k,
         )
 
@@ -1171,21 +957,20 @@ class TranscriptSearchEngine:
         self,
         occurrences: list[tuple[str, int, float]],
         row_ub,
-        scorer_factory,
-        payload_cols: tuple[str, ...],
+        partials,
+        payload: str,
         k: int,
     ) -> list[tuple[int, float]]:
         """Shared block-max selection (see :meth:`ranked_query_wand`):
         cluster-side upper bounds, two collect-only-survivors rounds,
-        exact scoring of selected blocks with ``scorer_factory(k)`` —
-        each selected block ships its top-k rows to the driver (k per
+        exact scoring of selected blocks with ``partials`` — each
+        selected block ships its top-k rows to the driver (k per
         block, not the block's up-to-``block_span`` docs; the global
         top-k and the round-1 threshold both survive per-block
         truncation because blocks partition the doc space)."""
         if not occurrences:
             self._last_wand_stats = {"round1_blocks": 0, "round2_blocks": 0}
             return []
-        scorer = scorer_factory(k)
         # adaptive fallback: when the whole index has no more doc-range
         # blocks than round 1 would select anyway, the upper-bound
         # aggregation job is pure overhead (it cannot prune a thing) —
@@ -1195,7 +980,7 @@ class TranscriptSearchEngine:
         # boundaries), which only ever errs toward this exact fallback.
         n_blocks_est = -(-self.num_docs // self.block_span)
         if n_blocks_est <= max(k, 32):
-            scored = self._score_block_ids(occurrences, None, scorer, payload_cols)
+            scored = self._score_block_ids(occurrences, None, partials, payload, k)
             self._last_wand_stats = {
                 "round1_blocks": 0,
                 "round2_blocks": 0,
@@ -1230,7 +1015,7 @@ class TranscriptSearchEngine:
             if not round1:
                 self._last_wand_stats = {"round1_blocks": 0, "round2_blocks": 0}
                 return []
-            scored = self._score_block_ids(occurrences, round1, scorer, payload_cols)
+            scored = self._score_block_ids(occurrences, round1, partials, payload, k)
             driver_rows = len(scored)
             top = sorted(scored.items(), key=lambda x: (-x[1], x[0]))[:k]
             round2: list[int] = []
@@ -1248,7 +1033,7 @@ class TranscriptSearchEngine:
                 ]
                 if round2:
                     extra = self._score_block_ids(
-                        occurrences, round2, scorer, payload_cols
+                        occurrences, round2, partials, payload, k
                     )
                     driver_rows += len(extra)
                     scored.update(extra)
@@ -1266,47 +1051,19 @@ class TranscriptSearchEngine:
         self,
         occurrences: list[tuple[str, int, float]],
         block_ids: list[int] | None,
-        scorer=None,
-        payload_cols: tuple[str, ...] = ("postings_bin", "weights_bin"),
+        partials,
+        payload: str,
+        k: int,
     ) -> dict[int, float]:
         """Exact scores for the given blocks (all query terms of those
         blocks participate — blocks partition the doc space, so each
-        doc's score is complete within its block). The ``scorer``
-        decides how many rows per block reach the driver: the WAND
-        rounds pass a per-block top-k scorer, so driver traffic is
-        O(selected_blocks * k). ``block_ids=None`` scores every block
-        (the exhaustive plan)."""
-        if scorer is None:
-            scorer = _block_scorer(None)
-        cells = self._postings_for_terms([t for t, _i, _w in occurrences])
-        if block_ids is not None:
-            cells = cells.where(
-                F.col("block_id").isin([int(b) for b in block_ids])
-            )
-        cells = _join_query_rows(
-            cells, occurrences, "term string, qidx int, wqt double"
-        ).select("block_id", "qidx", "wqt", *payload_cols)
-        tomb = self.tombstones
-        if tomb is not None:
-            # tombstones masked INSIDE the scoring rounds: a deleted
-            # doc in round 1 would inflate the threshold L and
-            # over-prune live docs in round 2
-            if block_ids is not None:
-                tomb = tomb.where(
-                    F.col("block_id").isin([int(b) for b in block_ids])
-                )
-            scored = (
-                cells.groupBy("block_id")
-                .cogroup(tomb.groupBy("block_id"))
-                .applyInPandas(
-                    _cogroup_blocked(scorer), "doc_id long, score double"
-                )
-            )
-        else:
-            scored = cells.groupBy("block_id").applyInPandas(
-                scorer, "doc_id long, score double"
-            )
-        pdf = scored.toPandas()
+        doc's score is complete within its block). Each block ships its
+        top-k, so driver traffic is O(selected_blocks * k), and the
+        tombstones mask INSIDE the rounds: a deleted doc in round 1
+        would inflate the threshold L and over-prune live docs in round
+        2. ``block_ids=None`` scores every block (the exhaustive plan)."""
+        cells = self._occurrence_cells(occurrences, payload)
+        pdf = self._score_cells(cells, partials, k, block_ids=block_ids).toPandas()
         return {
             int(d): float(s) for d, s in zip(pdf["doc_id"], pdf["score"])
         }
@@ -1340,8 +1097,10 @@ class TranscriptSearchEngine:
             if dfs.get(t)
         ]
 
-    def _allowed_by_block(self, where) -> DataFrame:
-        """(doc_id, block_id) for docs matching a metadata predicate.
+    def _allowed_by_block(self, where) -> DataFrame | None:
+        """(doc_id, block_id, boost=1.0) for docs matching a metadata
+        predicate — a restricting :func:`_block_topk` side; None when
+        ``where`` is None.
 
         The docs scan is column-pruned to doc_id + the predicate's
         columns, and the predicate itself is pushed into the Parquet
@@ -1351,44 +1110,70 @@ class TranscriptSearchEngine:
         co-shuffles the survivors with the posting blocks they belong
         to, so the cogrouped scorer sees each block's allowed set
         without any per-doc join against posting rows."""
+        if where is None:
+            return None
         pred = F.expr(where) if isinstance(where, str) else where
-        return self.docs.where(pred).select("doc_id", self._block_id_col())
+        return self.docs.where(pred).select(
+            "doc_id", self._block_id_col(), F.lit(1.0).alias("boost")
+        )
 
-    def _scored_blocks(
-        self, cells: DataFrame, scorer, where, allowed_df: DataFrame | None = None
+    def _score_cells(
+        self,
+        cells: DataFrame,
+        partials,
+        k: int | None,
+        *,
+        side: DataFrame | None = None,
+        restrict: bool = False,
+        per_group: int | None = None,
+        block_ids: list[int] | None = None,
+        query_ids: list[int] | None = None,
     ) -> DataFrame:
-        """Per-block scoring, optionally cogrouped with a metadata
-        filter (see :func:`_cogroup_filtered`) and/or the tombstone
-        snapshot (see :func:`_cogroup_blocked`). With BOTH a filter and
-        tombstones, the tombstones are anti-joined out of the (already
-        co-shuffled) allowed set — one cogroup either way.
+        """Per-block ranked scoring of ``cells`` with :func:`_block_topk`
+        — the one ranked-scoring reader of the tombstones.
 
-        ``allowed_df`` short-circuits the predicate path with an
-        explicit (doc_id, block_id) candidate set — the must-clause
-        shape (phrase-constrained ranking): candidates restrict the
-        RANKING, never the statistics."""
-        out_schema = "doc_id long, score double"
+        The tombstones join ``side`` as NULL-boost rows, so one
+        co-shuffled table carries the filter, boosts, groups and the
+        delete mask, and each worker sees exactly the deletions that can
+        touch its block. With neither a side nor tombstones a plain
+        grouped map runs; otherwise a cogroup. ``block_ids`` restricts
+        the scored blocks and their tombstones (WAND rounds);
+        ``query_ids`` groups by (query_id, block_id), and each block's
+        tombstones apply to every query of the batch."""
+        keys = ["block_id"] if query_ids is None else ["query_id", "block_id"]
+        schema = "doc_id long, score double"
+        if per_group is not None:
+            schema = "doc_id long, group_key string, score double"
+        if query_ids is not None:
+            schema = "query_id int, " + schema
+        run = _block_topk(partials, k, restrict, per_group)
         tomb = self.tombstones
-        if where is not None or allowed_df is not None:
-            allowed = (
-                allowed_df if allowed_df is not None else self._allowed_by_block(where)
-            )
-            if tomb is not None:
-                allowed = allowed.join(
-                    F.broadcast(tomb.select("doc_id")), "doc_id", "left_anti"
-                )
-            return (
-                cells.groupBy("block_id")
-                .cogroup(allowed.groupBy("block_id"))
-                .applyInPandas(_cogroup_filtered(scorer), out_schema)
-            )
+        if block_ids is not None:
+            in_blocks = F.col("block_id").isin([int(b) for b in block_ids])
+            cells = cells.where(in_blocks)
+            tomb = None if tomb is None else tomb.where(in_blocks)
         if tomb is not None:
-            return (
-                cells.groupBy("block_id")
-                .cogroup(tomb.groupBy("block_id"))
-                .applyInPandas(_cogroup_blocked(scorer), out_schema)
+            dead = tomb.select(
+                "doc_id", "block_id", F.lit(None).cast("double").alias("boost")
             )
-        return cells.groupBy("block_id").applyInPandas(scorer, out_schema)
+            side = (
+                dead
+                if side is None
+                else side.unionByName(dead, allowMissingColumns=True)
+            )
+        if side is None:
+            # the grouped map passes the key only to a 2-argument function
+            return cells.groupBy(*keys).applyInPandas(
+                lambda key, c: run(key, c), schema
+            )
+        if query_ids is not None:
+            qids = F.array(*[F.lit(q) for q in query_ids])
+            side = side.select(F.explode(qids).alias("query_id"), "*")
+        return (
+            cells.groupBy(*keys)
+            .cogroup(side.groupBy(*keys))
+            .applyInPandas(run, schema)
+        )
 
     def _score_terms_df(
         self, terms: list[str], k: int, where=None
@@ -1405,7 +1190,13 @@ class TranscriptSearchEngine:
         cells = self._ranked_cells(terms)
         if cells is None:
             return empty
-        scored = self._scored_blocks(cells, _block_scorer(k), where)
+        scored = self._score_cells(
+            cells,
+            _tfidf_partials,
+            k,
+            side=self._allowed_by_block(where),
+            restrict=where is not None,
+        )
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def _ranked_cells(self, terms: list[str]) -> DataFrame | None:
@@ -1443,51 +1234,17 @@ class TranscriptSearchEngine:
 
     def _boosts_by_block(self, boost) -> DataFrame:
         """(doc_id, block_id, boost) for docs whose multiplier differs
-        from 1.0, plus boost-NULL rows for tombstoned docs — ONE
-        co-shuffled right side carrying both the field weights and the
-        delete mask (see :func:`_cogroup_boosted`). The docs scan is
-        column-pruned to doc_id + the boost expression's inputs, and
-        the ``!= 1.0`` filter keeps the exchanged rows O(boosted docs),
-        not O(corpus) — a role boost over transcripts ships only the
-        boosted roles' ids."""
+        from 1.0 — the boosted paths' :func:`_block_topk` side. The docs
+        scan is column-pruned to doc_id + the boost expression's
+        inputs, and the ``!= 1.0`` filter keeps the exchanged rows
+        O(boosted docs), not O(corpus) — a role boost over transcripts
+        ships only the boosted roles' ids."""
         b = F.expr(boost) if isinstance(boost, str) else boost
-        out = (
-            self.docs.select(
-                "doc_id",
-                self._block_id_col(),
-                b.cast("double").alias("boost"),
-            )
-            .where(F.col("boost") != 1.0)
-        )
-        tomb = self.tombstones
-        if tomb is not None:
-            out = out.join(
-                F.broadcast(tomb.select("doc_id")), "doc_id", "left_anti"
-            ).unionByName(
-                tomb.select(
-                    "doc_id",
-                    "block_id",
-                    F.lit(None).cast("double").alias("boost"),
-                )
-            )
-        return out
-
-    def _groups_by_block(self, group_col: str) -> DataFrame:
-        """(doc_id, block_id, group_key) for every LIVE doc — the
-        diversified path's right side. Tombstones are anti-joined out
-        here, and the scorer's inner merge then masks deleted docs for
-        free (a doc with no group row cannot rank)."""
-        out = self.docs.select(
+        return self.docs.select(
             "doc_id",
             self._block_id_col(),
-            F.col(group_col).cast("string").alias("group_key"),
-        )
-        tomb = self.tombstones
-        if tomb is not None:
-            out = out.join(
-                F.broadcast(tomb.select("doc_id")), "doc_id", "left_anti"
-            )
-        return out
+            b.cast("double").alias("boost"),
+        ).where(F.col("boost") != 1.0)
 
     def ranked_query_boosted_df(
         self, query: str, boost, k: int = DEFAULT_K
@@ -1497,7 +1254,7 @@ class TranscriptSearchEngine:
         tool, recency … — e.g. ``2.0 where role='assistant'``). The
         BM25F-style field weighting for transcripts, executed as a
         cogrouped per-block multiply BEFORE top-k truncation (see
-        :func:`_cogroup_boosted` for why truncation must come after).
+        :func:`_block_topk` for why truncation must come after).
         ``boost`` is a Column or SQL string over the docs table; docs
         not matched keep weight 1.0."""
         terms = self._ranked_terms(query)
@@ -1505,10 +1262,8 @@ class TranscriptSearchEngine:
         cells = self._ranked_cells(terms) if terms else None
         if cells is None:
             return empty
-        scored = (
-            cells.groupBy("block_id")
-            .cogroup(self._boosts_by_block(boost).groupBy("block_id"))
-            .applyInPandas(_cogroup_boosted(k), "doc_id long, score double")
+        scored = self._score_cells(
+            cells, _tfidf_partials, k, side=self._boosts_by_block(boost)
         )
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -1526,10 +1281,25 @@ class TranscriptSearchEngine:
 
         Execution: per-block scoring cogrouped with the block's
         (doc_id, group_key) map applies the SAME cap per (block,
-        group) and per-block top-k (provably lossless — proof in
-        :func:`_cogroup_diverse`), then a window over the surviving
+        group) and per-block top-k, then a window over the surviving
         n_blocks×k rows re-caps globally and takes the final top-k.
-        Output: (doc_id, group_key, score)."""
+        Deleted docs drop in the kernel (NULL-boost tombstone rows), a
+        doc without a group row never ranks. Output: (doc_id,
+        group_key, score).
+
+        The per-block cap is lossless: order docs by the total order
+        (score desc, doc_id asc). If doc d belongs to the global
+        diversified top-k, then (a) d is among the global top
+        ``per_group`` of its group, hence also among the top
+        ``per_group`` of its group's docs WITHIN ITS BLOCK (ranking
+        within a subset can only improve), so d survives the
+        per-(block, group) cap; and (b) for every block-capped survivor
+        e ahead of d, e's group's global top-``per_group`` contains a
+        doc ahead of e (pointwise: the group's global j-th best beats
+        its block-local j-th best), giving an injection from block
+        survivors ahead of d into GLOBAL diversified candidates ahead of
+        d — fewer than k of those exist, so d is inside the block's
+        top-k too."""
         from pyspark.sql import Window
 
         terms = self._ranked_terms(query)
@@ -1539,13 +1309,14 @@ class TranscriptSearchEngine:
         cells = self._ranked_cells(terms) if terms else None
         if cells is None:
             return empty
-        scored = (
-            cells.groupBy("block_id")
-            .cogroup(self._groups_by_block(group_col).groupBy("block_id"))
-            .applyInPandas(
-                _cogroup_diverse(k, per_group),
-                "doc_id long, group_key string, score double",
-            )
+        groups = self.docs.select(
+            "doc_id",
+            self._block_id_col(),
+            F.lit(1.0).alias("boost"),
+            F.col(group_col).cast("string").alias("group_key"),
+        )
+        scored = self._score_cells(
+            cells, _tfidf_partials, k, side=groups, restrict=True, per_group=per_group
         )
         w = Window.partitionBy("group_key").orderBy(
             F.desc("score"), F.asc("doc_id")
@@ -1575,19 +1346,11 @@ class TranscriptSearchEngine:
         if not occurrences:
             return empty
         avgdl = self.total_tokens / self.num_docs
-        cells = self._occurrence_cells(occurrences, "doclens_bin")
-        scored = (
-            cells.groupBy("block_id")
-            .cogroup(self._boosts_by_block(boost).groupBy("block_id"))
-            .applyInPandas(
-                _cogroup_boosted(
-                    k,
-                    scorer_factory=lambda kk: _block_bm25_scorer(
-                        kk, k1, b, avgdl
-                    ),
-                ),
-                "doc_id long, score double",
-            )
+        scored = self._score_cells(
+            self._occurrence_cells(occurrences, "doclens_bin"),
+            _bm25_partials(k1, b, avgdl),
+            k,
+            side=self._boosts_by_block(boost),
         )
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -1626,26 +1389,12 @@ class TranscriptSearchEngine:
         # an index whose block count round 1 would fully select
         if pruned and -(-self.num_docs // self.block_span) > max(k, 32):
             return self._ranked_batch_wand(len(queries), rows, k)
-        cells = self._batch_cells(rows)
-        tomb = self.tombstones
-        if tomb is not None:
-            # each block's tombstones apply to EVERY query in the batch
-            qids = F.array(*[F.lit(q) for q in sorted({r[0] for r in rows})])
-            tomb_q = tomb.select(
-                F.explode(qids).alias("query_id"), "block_id", "doc_id"
-            )
-            scored = (
-                cells.groupBy("query_id", "block_id")
-                .cogroup(tomb_q.groupBy("query_id", "block_id"))
-                .applyInPandas(
-                    _cogroup_blocked_keyed(k),
-                    "query_id int, doc_id long, score double",
-                )
-            )
-        else:
-            scored = cells.groupBy("query_id", "block_id").applyInPandas(
-                _block_scorer_keyed(k), "query_id int, doc_id long, score double"
-            )
+        scored = self._score_cells(
+            self._batch_cells(rows),
+            _tfidf_partials,
+            k,
+            query_ids=sorted({r[0] for r in rows}),
+        )
         from pyspark.sql.window import Window
 
         w = Window.partitionBy("query_id").orderBy(
@@ -1792,27 +1541,15 @@ class TranscriptSearchEngine:
         cells = self._batch_cells(rows).join(
             F.broadcast(sel), ["query_id", "block_id"], "left_semi"
         )
-        tomb = self.tombstones
-        if tomb is not None:
-            # the selected pairs' tombstones, keyed per (query, block):
-            # the per-block tombstone set applies to every query that
-            # selected the block (same threshold-inflation argument as
-            # the single-query rounds)
-            tomb_q = F.broadcast(sel).join(tomb, "block_id").select(
-                "query_id", "block_id", "doc_id"
-            )
-            scored = (
-                cells.groupBy("query_id", "block_id")
-                .cogroup(tomb_q.groupBy("query_id", "block_id"))
-                .applyInPandas(
-                    _cogroup_blocked_keyed(k),
-                    "query_id int, doc_id long, score double",
-                )
-            )
-        else:
-            scored = cells.groupBy("query_id", "block_id").applyInPandas(
-                _block_scorer_keyed(k), "query_id int, doc_id long, score double"
-            )
+        # a selected block's tombstones mask every query that selected
+        # it (the single-query rounds' threshold-inflation argument)
+        scored = self._score_cells(
+            cells,
+            _tfidf_partials,
+            k,
+            block_ids=sorted({b for _q, b in pairs}),
+            query_ids=sorted({q for q, _b in pairs}),
+        )
         pdf = scored.toPandas()
         return {
             (int(q), int(d)): float(s)
@@ -1844,10 +1581,12 @@ class TranscriptSearchEngine:
         if not occurrences:
             return empty
         avgdl = self.total_tokens / self.num_docs
-        scored = self._scored_blocks(
+        scored = self._score_cells(
             self._occurrence_cells(occurrences, "doclens_bin"),
-            _block_bm25_scorer(k, k1, b, avgdl),
-            where,
+            _bm25_partials(k1, b, avgdl),
+            k,
+            side=self._allowed_by_block(where),
+            restrict=where is not None,
         )
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -2094,18 +1833,20 @@ class TranscriptSearchEngine:
             return empty
         if bm25:
             occurrences = self._bm25_occurrences(terms)
-            scorer = _block_bm25_scorer(
-                None, k1, b, self.total_tokens / self.num_docs
-            )
+            partials = _bm25_partials(k1, b, self.total_tokens / self.num_docs)
             payload = "doclens_bin"
         else:
             occurrences = self._weighted_occurrences(terms)
-            scorer = _block_scorer(None)
+            partials = _tfidf_partials
             payload = "weights_bin"
         if not occurrences:
             return empty
-        scored = self._scored_blocks(
-            self._occurrence_cells(occurrences, payload), scorer, where
+        scored = self._score_cells(
+            self._occurrence_cells(occurrences, payload),
+            partials,
+            None,
+            side=self._allowed_by_block(where),
+            restrict=where is not None,
         )
         keyed = scored.join(self.docs.select("doc_id", "conv_id"), "doc_id")
         best = F.max(F.struct(F.col("score"), (-F.col("doc_id")).alias("neg_id")))
@@ -2463,7 +2204,7 @@ class TranscriptSearchEngine:
         phrase's terms. Statistics (N, df, L_d) stay corpus-global —
         the phrase restricts the CANDIDATES, exactly the ``where=`` /
         tombstone discipline (masking happens BEFORE per-block top-k
-        truncation, via the same cogroup adapter)."""
+        truncation, in the same kernel, :func:`_block_topk`)."""
         terms = [t for t in (query_normalize(w) for w in query.split()) if t]
         empty = self.spark.createDataFrame([], "doc_id long, score double")
         if not terms:
@@ -2476,10 +2217,10 @@ class TranscriptSearchEngine:
         if cells is None:
             return empty
         allowed = self._phrase_df(terms).select(
-            "doc_id", self._block_id_col()
+            "doc_id", self._block_id_col(), F.lit(1.0).alias("boost")
         )
-        scored = self._scored_blocks(
-            cells, _block_scorer(k), None, allowed_df=allowed
+        scored = self._score_cells(
+            cells, _tfidf_partials, k, side=allowed, restrict=True
         )
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -2497,7 +2238,7 @@ class TranscriptSearchEngine:
         per-block union counts over the members' posting cells (blocks
         partition docs, so the integer partials sum exactly); (2) the
         standard per-block scoring plan with group-tf blending inside
-        the scorer (:func:`_block_synonym_scorer`), tombstones
+        the kernel's weights (:func:`_synonym_partials`), tombstones
         cogrouped as usual."""
         mapping: list[tuple[str, int]] = []
         for gi, g in enumerate(groups):
@@ -2527,7 +2268,7 @@ class TranscriptSearchEngine:
             [(t, gi, float(log(1 + self.num_docs / gdfs[gi]))) for t, gi in live],
             "term string, gid int, wqt double",
         ).select("block_id", "gid", "wqt", "postings_bin", "weights_bin")
-        scored = self._scored_blocks(cells, _block_synonym_scorer(k), None)
+        scored = self._score_cells(cells, _synonym_partials, k)
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def bm25f_conv_df(
@@ -2551,7 +2292,8 @@ class TranscriptSearchEngine:
         Cost shape — no corpus re-tokenize: per-(conv, term, role) tfs
         come from decoding the QUERY-PRUNED posting cells cogrouped
         with a blocks-restricted docs-metadata projection
-        (:func:`_cogroup_conv_tf`, the ``_cogroup_boosted`` shape);
+        (:func:`_cogroup_conv_tf`, the :meth:`_score_cells` cogroup
+        shape);
         per-(conv, role) field lengths come from ``doc_stats`` (the
         index's own doc_len), one thin join + integer agg."""
         from search_engine_spark.simple import bm25f_score_topk

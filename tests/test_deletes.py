@@ -86,6 +86,45 @@ def test_all_query_paths_mask(deleted_engine):
     assert not ({doc for doc, _ in filtered} & dele)
 
 
+def test_side_table_paths_mask_pre_topk(spark, tmp_path):
+    """The scored paths that carry a side table or their own weights —
+    BM25 with ``where=``, boosted BM25, phrase- and synonym-ranked —
+    after deleting docs from each one's top results, each equals its
+    pre-delete untruncated ranking minus the deleted ids, cut to k."""
+    from pyspark.sql import functions as F
+
+    docs = synthetic_transcripts(spark, n_convs=40, turns_per_conv=10)
+    eng = TranscriptSearchEngine.build(
+        spark, docs, str(tmp_path / "idx"), block_span=16
+    )
+    boost = (
+        F.when(F.col("role") == "assistant", 3.0)
+        .when(F.col("role") == "tool", 0.5)
+        .otherwise(1.0)
+    )
+    paths = {
+        "bm25_where": lambda k: eng.bm25_query_df(
+            QUERY, k=k, where="role != 'tool'"
+        ),
+        "bm25_boosted": lambda k: eng.bm25_query_boosted_df(QUERY, boost, k=k),
+        "phrase": lambda k: eng.phrase_ranked_df("test test", k=k),
+        "synonym": lambda k: eng.synonym_ranked_df(
+            [["test", "document"], ["here", "data"]], k=k
+        ),
+    }
+
+    def ranking(df):
+        return [(r["doc_id"], r["score"]) for r in df.collect()]
+
+    full = {name: ranking(fn(10**6)) for name, fn in paths.items()}
+    dele = {doc for r in full.values() for doc, _ in r[:8:2]}
+    eng.delete(sorted(dele))
+    for name, fn in paths.items():
+        assert {doc for doc, _ in full[name][:10]} & dele, name
+        expect = [(doc, s) for doc, s in full[name] if doc not in dele][:10]
+        assert ranking(fn(10)) == expect, name
+
+
 def test_facet_counts_exclude_deleted(deleted_engine):
     eng, dele, _ = deleted_engine
     hits = set(eng.boolean_query("test"))
